@@ -32,7 +32,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from wp_motor_spark.queries import QUERIES
-    from wp_motor_spark.session import get_spark
+    from wp_motor_spark.session import get_spark, persist_scope
 
     spark = get_spark(app_name="wp_motor_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -53,7 +53,8 @@ def main() -> None:
         throughput = {"err": f"{type(exc).__name__}: {exc}"[:500]}
 
     # Warm the JVM/codegen path so query 1 doesn't absorb session startup.
-    next(iter(QUERIES.values()))[0](spark, sf_dir).limit(1).count()
+    with persist_scope():
+        next(iter(QUERIES.values()))[0](spark, sf_dir).limit(1).count()
 
     # Two full passes, best-of-2 per query: the box is shared, so a single
     # shot can catch a noisy-neighbor spike (observed 7x swings on the same
@@ -73,7 +74,13 @@ def main() -> None:
             try:
                 load0 = os.getloadavg()[0]
                 t0 = time.perf_counter()
-                try:
+                # the scope releases this query's persists (_global_rank
+                # loc, host_triangles edges, the dedup pair pipeline, …)
+                # after its action, or when it raises — otherwise 200
+                # queries accumulate InMemoryRelations until eviction
+                # pressure, and a later query with a CacheManager-identical
+                # plan would time a cache replay instead of the pipeline
+                with persist_scope():
                     df = fn(spark, sf_dir)
                     # force FULL execution of every output column: a bare
                     # count() lets Catalyst prune computed projections
@@ -88,19 +95,6 @@ def main() -> None:
                         )
                     ).collect()
                     elapsed = round(time.perf_counter() - t0, 3)
-                finally:
-                    # release per-query tracked persists (_global_rank loc,
-                    # host_triangles edges, …) whether or not the query
-                    # raised (r15 ADVICE: a handle registered before a
-                    # failure must not leak into later timings) —
-                    # otherwise 200 queries accumulate InMemoryRelations
-                    # until eviction pressure. Since r17 this also drains
-                    # the operators/dedup registry, so the ngram-jaccard
-                    # pair pipeline is recomputed per query (no cross-
-                    # query cache reuse flattering the second timing).
-                    from wp_motor_spark.queries import release_persists
-
-                    release_persists()
                 if name not in timings or elapsed < timings[name]:
                     timings[name] = elapsed
                 rec = noise.setdefault(name, {"times": [], "loadavg": []})

@@ -4,6 +4,7 @@ load via WpApp::try_from)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from wp_motor_spark.config import build_pipeline, load_workspace
@@ -315,12 +316,19 @@ enabled = false
     assert ws.skip_parse and ws.skip_sink
 
     # defaults mirror engine.rs Default impls
-    empty = load_workspace(str(tmp_path / "nowhere"))
+    (tmp_path / "bare").mkdir()
+    empty = load_workspace(str(tmp_path / "bare"))
     assert empty.version == "1.0"
     assert empty.parallel == 2 and empty.speed_limit == 10000
     assert empty.rescue_path.endswith(os.path.normpath("data/rescue"))
     assert not empty.semantic_enabled
     assert not empty.skip_parse and not empty.skip_sink
+
+
+def test_load_workspace_missing_root_raises(tmp_path):
+    """A typo'd --work-root must fail loudly, not run with no rules."""
+    with pytest.raises(FileNotFoundError, match="nowhere"):
+        load_workspace(str(tmp_path / "nowhere"))
 
 
 def test_skip_parse_and_skip_sink_stage_switches(tmp_path, spark):

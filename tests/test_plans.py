@@ -1,12 +1,17 @@
 """Physical-plan assertions: the scale-critical properties must survive
 refactors — pushdown/pruning at the scan, broadcast (not shuffle) joins
-for dims, map-only parse/transform paths.
+for dims, map-only parse/transform paths — and the persist scope that
+releases the InMemoryRelations query builders cache.
 """
 
+import threading
+
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from wp_motor_spark.queries import QUERIES
+from wp_motor_spark.session import persist_scope, scoped_persist
 
 
 def _plan(spark, sf001_dir, name):
@@ -315,6 +320,87 @@ def test_ngram_jaccard_carries_sizes_through_index(spark, sf001_dir):
     plan = _plan(spark, sf001_dir, "ngram_jaccard_dups")
     assert "InMemoryRelation" not in plan
     assert "Join" not in plan  # jaccard computed off the count agg alone
-    for line in plan.splitlines():
-        if "Filter" in line and "Scan" not in line:
-            assert "regexp_replace" not in line, line[:160]
+    filters = [l for l in plan.splitlines() if "Filter" in l and "Scan" not in l]
+    # at least one Filter above the scan must be examined, or a change in
+    # the plan's text format would pass this check vacuously
+    assert filters, plan[:2000]
+    for line in filters:
+        assert "regexp_replace" not in line, line[:160]
+
+
+def _cached_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_persist_scope_releases_on_exit_and_on_error(spark):
+    before = _cached_rdds(spark)
+    with persist_scope():
+        df = scoped_persist(spark.range(101).selectExpr("id * 3 AS x"))
+        df.count()
+        assert _cached_rdds(spark) == before + 1
+    assert _cached_rdds(spark) == before
+    assert df.storageLevel == StorageLevel.NONE
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with persist_scope():
+            scoped_persist(spark.range(103).selectExpr("id * 5 AS x")).count()
+            assert _cached_rdds(spark) == before + 1
+            raise RuntimeError("boom")
+    assert _cached_rdds(spark) == before
+
+
+def test_persist_scope_releases_only_its_own_frame(spark):
+    """A persist made outside any scope belongs to the caller; a nested
+    scope releases only what was persisted since it opened."""
+    owned = scoped_persist(spark.range(107).selectExpr("id * 7 AS x"))
+    owned.count()
+    try:
+        with persist_scope():
+            outer = scoped_persist(spark.range(109).selectExpr("id * 11 AS x"))
+            outer.count()
+            with persist_scope():
+                inner = scoped_persist(spark.range(113).selectExpr("id * 13 AS x"))
+                inner.count()
+            assert inner.storageLevel == StorageLevel.NONE
+            assert outer.storageLevel != StorageLevel.NONE
+        assert outer.storageLevel == StorageLevel.NONE
+        assert owned.storageLevel == StorageLevel.MEMORY_AND_DISK
+    finally:
+        owned.unpersist()
+
+
+def test_persist_scopes_in_two_threads_are_independent(spark):
+    """Each thread sees only the scopes it opened: thread A leaving its
+    scope while thread B's is still open must not release B's frame."""
+    both_cached = threading.Barrier(2, timeout=120)
+    a_left = threading.Event()
+    seen: dict[str, object] = {}
+
+    def run_a():
+        with persist_scope():
+            df = scoped_persist(spark.range(127).selectExpr("id * 17 AS x"))
+            df.count()
+            both_cached.wait()
+        seen["a_after_exit"] = df.storageLevel
+        a_left.set()
+
+    def run_b():
+        with persist_scope():
+            df = scoped_persist(spark.range(131).selectExpr("id * 19 AS x"))
+            df.count()
+            both_cached.wait()
+            a_left.wait(120)
+            seen["b_after_a_exit"] = df.storageLevel
+        seen["b_after_exit"] = df.storageLevel
+
+    threads = [threading.Thread(target=run_a), threading.Thread(target=run_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(240)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {
+        "a_after_exit": StorageLevel.NONE,
+        "b_after_a_exit": StorageLevel.MEMORY_AND_DISK,
+        "b_after_exit": StorageLevel.NONE,
+    }

@@ -1,11 +1,14 @@
 """WPL golden tests against the reference's own fixture corpus.
 
-Fixtures: /root/reference/tests/sample/* and tests/instance/wpl/* — the same
-inputs the reference engine's integration tests consume (SURVEY.md §5).
+Fixtures: the reference tree's tests/sample/* and tests/instance/wpl/* —
+the same inputs the reference engine's integration tests consume
+(SURVEY.md §5). Tests that read those files skip when the tree is absent;
+the nginx rule is the in-repo F1 fixture (FIXTURES.md).
 """
 
 import base64
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +17,18 @@ from wp_motor_spark.wpl import MultiParser, compile_rule, parse_wpl
 
 REF = "/root/reference"
 
-NGINX_WPL = open(f"{REF}/tests/instance/wpl/example/simple/parse.wpl").read()
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(REF),
+    reason="reads the reference's sample corpus, which is not checked out",
+)
+
+# F1 (FIXTURES.md): the reference's tests/instance/wpl/example/simple rule
+NGINX_WPL = """package /example/simple {
+  rule nginx {
+    (ip:sip,2*_,time/clf:recv_time<[,]>,http/request",http/status,digit,chars",http/agent",_")
+  }
+}
+"""
 NGINX_LINE = (
     '192.168.1.2 - - [06/Aug/2019:12:12:19 +0800] "GET /nginx-logo.png HTTP/1.1" '
     '200 368 "http://119.122.1.4/" "Mozilla/5.0 (Macintosh)" "-"'
@@ -49,6 +63,7 @@ def test_nginx_golden(spark):
     assert row["_rule"] == "/example/simple/nginx"
 
 
+@needs_ref
 def test_nginx_sample_dat(spark):
     cr = compile_rule(parse_wpl(NGINX_WPL)[0])
     df = spark.read.text(f"{REF}/tests/sample/nginx/sample.dat")
@@ -72,6 +87,7 @@ def test_miss_and_residue(spark):
     assert len(prow) == 1 and prow[0]["_residue"].strip() == "tail"
 
 
+@needs_ref
 def test_h3c_waf_base64_kv(spark):
     """F3: base64 preprocessor + scope fmt + bulk kv repeat."""
     wpl = open(f"{REF}/tests/sample/h3c_waf/parse.wpl").read()
@@ -89,6 +105,7 @@ def test_h3c_waf_base64_kv(spark):
     assert kv["action"] == "REJECT"
 
 
+@needs_ref
 def test_huawei_partial_corpus(spark):
     """F4: POLICYPERMIT lines match; SESSION_* lines miss (no CID= segment)."""
     wpl = open(f"{REF}/tests/sample/huawei_zhuru/parse.wpl").read()
@@ -103,6 +120,7 @@ def test_huawei_partial_corpus(spark):
     assert ok["kv_2"]["vsys"] == "CSG_Security"
 
 
+@needs_ref
 def test_benchmark_multirule_dispatch(spark):
     """F2: two comma-separated rules; first-match-wins labeling."""
     wpl = open(f"{REF}/tests/instance/wpl/benchmark/parse.wpl").read()
@@ -146,6 +164,47 @@ def test_wpl_guard_pipes(spark):
     assert disp["warn"] == "miss"
 
 
+def test_guard_failure_falls_through_the_cascade(spark):
+    """A row that matches a rule's pattern but fails its guard is that
+    rule's miss, not a lost row: the first-match cascade moves on to the
+    next rule (parser.rs:26-114), and a row every rule rejects reaches the
+    miss channel. Pipe, id_card checksum and json validity guards alike."""
+    from wp_motor_spark.pipeline import Pipeline
+
+    wpl = """package /t {
+  rule a { (digit:code | digit_in(1,2), chars:msg) }
+  rule j { (symbol(J),json:doc) }
+  rule c { (id_card:idc, chars:msg) }
+  rule b { (digit:code, chars:msg) }
+}"""
+    bad_json = 'J {"a":1,"b":2,"c":  "a" : 1 } }'
+    lines = [
+        "1 ok", "7 bad", "x y z q", 'J {"a":1}', bad_json,
+        "310104202002299069 ok", "310104202002299068 bad",
+    ]
+    df = spark.createDataFrame([(v,) for v in lines], ["value"])
+    labeled = {
+        r["value"]: (r["_rule"], r["_disposition"])
+        for r in MultiParser(wpl).label(df).collect()
+    }
+    assert labeled == {
+        "1 ok": ("/t/a", "success"),
+        "7 bad": ("/t/b", "success"),
+        "x y z q": (None, "miss"),
+        'J {"a":1}': ("/t/j", "success"),
+        bad_json: (None, "miss"),
+        "310104202002299069 ok": ("/t/c", "success"),
+        "310104202002299068 bad": ("/t/b", "success"),
+    }
+
+    branches = Pipeline(wpl).transform(df)
+    routed = {(r["_rule"], r["code"]) for r in branches["default"].collect()}
+    assert routed == {
+        ("/t/a", 1), ("/t/b", 7), ("/t/j", None), ("/t/c", None),
+        ("/t/b", 310104202002299068),
+    }
+    assert {r["value"] for r in branches["miss"].collect()} == {"x y z q", bad_json}
+
 def test_tag_annotation(spark):
     wpl = '#[tag(env:"prod")] rule t { (digit:n) }'
     cr = compile_rule(parse_wpl(wpl)[0])
@@ -165,6 +224,7 @@ def test_alt_group(spark):
     assert rows["y"]["addr"] is None
 
 
+@needs_ref
 def test_h3c_waf_golden(spark):
     """Base64-wrapped kv syslog (tests/sample/h3c_waf): preproc decode +
     scope digit + double timestamps + merged kv runs."""
@@ -182,6 +242,7 @@ def test_h3c_waf_golden(spark):
     assert kv["action"] == "REJECT"
 
 
+@needs_ref
 def test_huawei_zhuru_golden(spark):
     """Huawei USG base64 syslog (tests/sample/huawei_zhuru): only the two
     POLICY lines satisfy the kv(@CID) guard; SECLOG lines miss — the same
@@ -364,6 +425,7 @@ def test_auto_subfield_in_containers(spark):
     assert (row2["t"], row2["v"]) == ("float", "443.0")
 
 
+@needs_ref
 def test_unquote_unescape_quota_golden(spark):
     """parser_functionality.rs should_parse_json_with_escaped_quotes +
     quotation.rs unit vectors: `unquote/unescape` drops every UNESCAPED
@@ -446,11 +508,11 @@ def test_http_request_method_validation(spark):
     assert got["GET  /hello.png  HTTP/1.1 200"][1]["uri"] == "/hello.png"
 
 
-def test_adaptive_reorder_and_short_circuit(spark):
+def test_adaptive_reorder_by_hit_count(spark):
     """parser.rs:119-134 `optimized()`: rules resort by sampled hit count
     (desc, ties by declared index); with disjoint rules the labeled output
-    is identical in all four mode/order combinations, and the hot rule
-    moves to the front of the compiled cascade."""
+    is identical in both orders, and the hot rule moves to the front of
+    the compiled cascade."""
     wpl = (
         "rule cold { (symbol(#),digit:n) }\n"
         "rule hot { (ip:src,digit:port) }\n"
@@ -469,20 +531,19 @@ def test_adaptive_reorder_and_short_circuit(spark):
     tied = mp.optimized(counts={"hot": 5, "cold": 5})
     assert [cr.key for cr in tied.rules] == ["cold", "hot"]
 
-    def snap(parser, **kw):
+    def snap(parser):
         return sorted(
             (r["value"], r["_rule"], r["_disposition"], r["_residue"])
-            for r in parser.label(df, **kw).collect()
+            for r in parser.label(df).collect()
         )
 
     base = snap(mp)
-    assert snap(mp, short_circuit=True) == base
     assert snap(opt) == base
-    assert snap(opt, short_circuit=True) == base
     # hit rows labeled with the right rule either way
     assert sum(1 for _, rule, _, _ in base if rule == "hot") == 90
 
 
+@needs_ref
 def test_reference_benchmark_rules_full_extraction(spark):
     """The reference's own 27-field benchmark rules against its own sample
     lines (tests/instance/wpl/benchmark): every typed field — times, SNs,
@@ -533,6 +594,7 @@ def test_reference_benchmark_rules_full_extraction(spark):
     assert len(r2["kv"]) == 8
 
 
+@needs_ref
 def test_actor_workflow_h3c_base64_golden(spark):
     """Reference tests/actor_workflows.rs::actor_workflows_process_http_logs
     _with_base64_decoding: the inline rule |decode/base64|(digit:id<<,>>,

@@ -28,8 +28,8 @@ def main() -> None:
                     help="suffix: write plans/r17/<q>_<suffix>.txt")
     args = ap.parse_args()
 
-    from wp_motor_spark.queries import QUERIES, release_persists
-    from wp_motor_spark.session import get_spark
+    from wp_motor_spark.queries import QUERIES
+    from wp_motor_spark.session import get_spark, persist_scope
 
     spark = get_spark(app_name="opt_measure")
     spark.sparkContext.setLogLevel("ERROR")
@@ -45,19 +45,17 @@ def main() -> None:
         times = []
         for i in range(args.passes):
             t0 = time.perf_counter()
-            try:
+            with persist_scope():
                 df = fn(spark, args.sf)
                 df.write.format("noop").mode("overwrite").save()
                 times.append(round(time.perf_counter() - t0, 3))
-            finally:
-                release_persists()
         if args.plans:
-            df = fn(spark, args.sf)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+            with persist_scope():
+                df = fn(spark, args.sf)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted")
             with open(os.path.join(plans_dir, f"{name}_{args.plans}.txt"), "w") as fh:
                 fh.write(plan)
-            release_persists()
         spark.catalog.clearCache()
         out[name] = {"min": min(times), "times": times,
                      "loadavg": round(os.getloadavg()[0], 2)}

@@ -77,6 +77,8 @@ def main():
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    from wp_motor_spark.session import persist_scope
+
     # a VANILLA session, like the round driver builds — queries must set
     # any runtime confs they need themselves (sources/tables.py)
     spark = (
@@ -95,19 +97,16 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
+            # drop the query's persists once materialized (the full sweep
+            # would otherwise accumulate InMemoryRelations)
+            with persist_scope():
+                sdf = fn(spark, sf_dir)
+                srows = sdf.collect()
+                scols = sdf.columns
         except Exception as e:  # noqa: BLE001
             print(f"{name:28s} SPARK-ERROR {type(e).__name__}: {e}")
             failures.append(name)
             continue
-        finally:
-            # drop per-query tracked persists once materialized (the
-            # 203-query sweep would otherwise accumulate InMemoryRelations)
-            from wp_motor_spark.queries import release_persists
-
-            release_persists()
         sql = oracles.get(name)
         if sql is None:
             print(f"{name:28s} rows-only    {len(srows)} rows")

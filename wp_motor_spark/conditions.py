@@ -157,18 +157,3 @@ def _compare(p: _P, columns=None) -> Column:
         return col.like(_glob_to_like(pat))
     raise ConditionSyntaxError(f"unknown operator {op!r}")
 
-
-def route(df, sinks: dict[str, str | None], persist: bool = True):
-    """Fan one DataFrame out to named sinks by condition.
-
-    Reference: dispatcher oml.rs:351-363 — a record goes to EVERY sink whose
-    condition matches (not first-match). ``persist`` caches the parent so N
-    filtered branches share one upstream computation (the Spark analog of
-    the reference's clone-minimized fanout, oml.rs:19-26).
-    """
-    if persist:
-        df = df.persist()
-    return {
-        name: (df if cond is None else df.filter(compile_condition(cond)))
-        for name, cond in sinks.items()
-    }

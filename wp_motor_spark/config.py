@@ -157,7 +157,10 @@ def _toml(path: str) -> dict:
 def load_workspace(root: str, out_root: str | None = None) -> Workspace:
     """Parse a reference-layout workspace. ``out_root``, when given,
     rebases every sink's relative output path (tests never write into the
-    workspace)."""
+    workspace). A missing ``root`` raises FileNotFoundError rather than
+    loading as an empty workspace with no rules."""
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"workspace root not found: {root}")
     ws = Workspace(root=root, out_root=out_root)
     conf_path = os.path.join(root, "conf", "wparse.toml")
     if os.path.exists(conf_path):

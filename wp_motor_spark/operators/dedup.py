@@ -17,36 +17,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 
-#: persisted intermediates created inside these operator functions, exposed
-#: so a suite harness (queries.release_persists -> bench.py / oracle_check)
-#: can unpersist them after each query's action. Without the registry the
-#: CacheManager plan-matches a later identical invocation onto the still-
-#: cached frame, so the second query (or the second bench pass) times a
-#: cache replay instead of the pipeline — cross-query amortization the
-#: bench must not report. Library callers that never release simply keep
-#: the persists, same as before.
-_PERSISTED: list[DataFrame] = []
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _PERSISTED.append(out)
-    return out
-
-
-def _no_pushdown(c: Column) -> Column:
-    """Value-identity wrapper Catalyst treats as nondeterministic (twin of
-    wpl/compiler._no_pushdown): ``shuffle`` of a 1-element array always
-    yields that element, but the nondeterministic flag stops
-    InferFiltersFromGenerate + PushPredicateThroughNonJoin from rewriting
-    a filter on the wrapped column in terms of its defining expression and
-    pushing it below the projection — which re-runs the whole shingle
-    tokenizer per row in the pre-spread single-partition scan layout
-    (measured 4x on ngram_jaccard_dups at sf0.1 when the un-persisted
-    shingle frame exposed the pathology)."""
-    return F.shuffle(F.array(c)).getItem(0)
+from wp_motor_spark.session import scoped_persist
+from wp_motor_spark.wpl.compiler import _no_pushdown
 
 
 def normalize_text(col: Column) -> Column:
@@ -235,9 +210,10 @@ def minhash_lsh_pairs(
     # (id, hash-set) is consumed 3x (signature + both verification sides);
     # persist so the text->shingle->hash pipeline runs once. The persisted
     # slice is ids + long arrays — a small fraction of the document bytes.
-    sets = _track_persist(
+    sets = scoped_persist(
         _spread(df, [id_col, text_col])
-        .select(F.col(id_col).alias("__id"), shingle_hashes(F.col(text_col), n).alias("__sh"))
+        .select(F.col(id_col).alias("__id"), shingle_hashes(F.col(text_col), n).alias("__sh")),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
     sig = sets.select("__id", minhash_signature(F.col("__sh"), num_hashes).alias("__sig"))
     banded = sig.select(
@@ -481,7 +457,10 @@ def fingerprint_pairs(
     bw = 64 // n_blocks
     mask = (1 << bw) - 1
     # persisted: consumed by all block-join branches (fingerprints only)
-    f = _track_persist(f.select(F.col(id_col).alias("__id"), F.col(fp_col).alias("__fp")))
+    f = scoped_persist(
+        f.select(F.col(id_col).alias("__id"), F.col(fp_col).alias("__fp")),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     blocks = f.select(
         "__id",
         "__fp",

@@ -14,7 +14,9 @@ Infra side-channels (tests/instance/topology/sinks/infra.d/): miss
 (WPL-unmatched), residue (partial tails), error (empty OML output),
 default (no OML model matched). Everything is map-only + broadcast joins:
 at 100TB each branch is an independent column-pruned scan of the same
-source, and multi-sink fanout reuses one parsed DataFrame (persist()).
+source. Nothing is persisted: every sink's action re-reads and re-parses
+the source (the deterministic wp_event_id keeps records aligned across
+those passes).
 
 Batch and streaming share the plan: `run_stream` wraps the same batch
 assembly in foreachBatch (the reference's daemon mode).

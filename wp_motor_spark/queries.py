@@ -17,13 +17,13 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from wp_motor_spark.conditions import compile_condition
 from wp_motor_spark.knowdb import KnowDB
 from wp_motor_spark.operators import dedup, similarity, text
 from wp_motor_spark.operators.stats import windowed_counts
+from wp_motor_spark.session import scoped_persist
 from wp_motor_spark.wpl import compile_rule, parse_wpl
 
 
@@ -39,46 +39,6 @@ def _t(
     from wp_motor_spark.sources.tables import load_table
 
     return load_table(spark, sf_dir, name, spread=spread)
-
-
-#: persisted intermediates registered by query builders so a suite harness
-#: (bench.py, tools/oracle_check.py) can release them after each query's
-#: result materializes — a 200-query session would otherwise accumulate
-#: InMemoryRelations until eviction pressure.
-_PERSISTED: list[DataFrame] = []
-
-
-def _track_persist(df: DataFrame, level=StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    out = df.persist(level)
-    _PERSISTED.append(out)
-    return out
-
-
-def release_persists() -> int:
-    """Unpersist every intermediate registered via _track_persist — both
-    this module's registry and the operator-module one (operators/dedup:
-    the shingle/fingerprint/pair-pipeline persists; r17 — previously
-    untracked, so a later query with a CacheManager-identical plan replayed
-    the first query's cache instead of computing).
-
-    Call after the consuming action (collect/write) — unpersisting before
-    materialization would just force recomputation. Returns the number of
-    handles released."""
-    n = 0
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    dp = dedup._PERSISTED
-    while dp:
-        try:
-            dp.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def _global_rank(df: DataFrame, order_cols: list, rank_col: str = "rank") -> DataFrame:
@@ -97,7 +57,7 @@ def _global_rank(df: DataFrame, order_cols: list, rank_col: str = "rank") -> Dat
     (spark.sql.exchange.reuse) deduplicating them. With the persist both
     subtrees read one InMemoryRelation, i.e. one physical partitioning,
     regardless of reuse behavior."""
-    loc = _track_persist(
+    loc = scoped_persist(
         df.repartitionByRange(*order_cols)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn(
@@ -142,7 +102,7 @@ def _global_rank_cumsum(
     Values are exactly those of the two-pass composition."""
     dtype = dict(df.dtypes)[value_col]
     w_part = Window.partitionBy("__pid").orderBy(*order_cols)
-    loc = _track_persist(
+    loc = scoped_persist(
         df.repartitionByRange(*order_cols)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__lr", F.row_number().over(w_part))
@@ -3679,7 +3639,7 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (long, word, word) / (word, word, long) rows, disk-spillable
     (guide §5 caching rule: reused AND recompute-expensive)."""
     docs = _t(spark, sf_dir, "documents")
-    bg = _track_persist(
+    bg = scoped_persist(
         docs.select("doc_id", text.tokens(F.col("text")).alias("a"))
         .where(F.size("a") >= 2)
         .select(
@@ -3694,7 +3654,7 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "z.w1", "z.w2")
     )
-    c12 = _track_persist(
+    c12 = scoped_persist(
         bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     )
     c1 = c12.groupBy("w1").agg(F.sum("c").alias("ctx"))
@@ -4876,7 +4836,7 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # histogram/cut branch and the final bucket join, and without the
     # cache the whole bigram-LM subtree executes twice (4 FileScans ->
     # 2). |docs| rows x 3 scalars — disk-spillable at any corpus size.
-    j = _track_persist(ppl.join(src, "doc_id"))
+    j = scoped_persist(ppl.join(src, "doc_id"))
     hist = j.groupBy("source", "ppl").agg(F.count(F.lit(1)).alias("cnt"))
     wsrc = Window.partitionBy("source").orderBy("ppl")
     cum = (
@@ -5248,7 +5208,7 @@ def stupid_backoff_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream x2, bigram stream, unigram stream x2) — the tokenization
     # ran five times without the cache; (long, bool, array<word>) rows,
     # disk-spillable
-    tok = _track_persist(
+    tok = scoped_persist(
         docs.select(
             "doc_id",
             (F.col("doc_id") % 2 == 0).alias("train"),
@@ -6893,7 +6853,7 @@ def ewma_anomaly_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # feeds both the composite pass and the emit pass — persist once
-    aug = _track_persist(
+    aug = scoped_persist(
         evd.join(F.broadcast(wks), ["event_type", "wk"]).drop("wk")
     )
 
@@ -7313,7 +7273,7 @@ def kneser_ney_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("c1"), F.count_distinct("w2").alias("n1p_fw")
     )
     # |bigram types|-bounded distinct, referenced by BOTH cont and T
-    types = _track_persist(train.select("w1", "w2").distinct())
+    types = scoped_persist(train.select("w1", "w2").distinct())
     cont = types.groupBy("w2").agg(F.count("*").alias("n1p_bw"))
     t_total = types.agg(F.count("*").alias("T"))
     test = bg.where(~F.col("train"))
@@ -7567,7 +7527,7 @@ def burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aug feeds BOTH the composite pass and the runs pass — persist so
     # the day-index join pipeline materializes once (tracked; released
     # by the suite harness after the consuming action)
-    aug = _track_persist(evc.unionByName(carry).join(F.broadcast(tot), "event_type"))
+    aug = scoped_persist(evc.unionByName(carry).join(F.broadcast(tot), "event_type"))
 
     def _gaps(pdf: pd.DataFrame):
         pdf = pdf.sort_values(["ts", "event_id"])
@@ -7897,7 +7857,7 @@ def robust_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch AND the |q - median| deviation branch, and without the cache
     # the text tokenization ran twice. ~16 bytes/row, disk-spillable —
     # caching the metadata proxy, never the text payload (guide §2.3).
-    q = _track_persist(
+    q = scoped_persist(
         docs.select(
             "source",
             (F.size(F.array_distinct(toks)) / F.size(toks)).alias("q"),
@@ -7939,7 +7899,7 @@ def robust_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # |sources|-bounded; persisted because it broadcasts into the
     # deviation branch AND joins the final output (was planned twice)
-    stats = _track_persist(
+    stats = scoped_persist(
         spans.groupBy("source").agg(
             F.max("n").alias("n_docs"),
             (
@@ -8640,7 +8600,7 @@ def quality_ensemble_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     not payloads)."""
     docs = _t(spark, sf_dir, "documents")
     toks = text.tokens(F.col("text"))
-    base = _track_persist(docs.select(
+    base = scoped_persist(docs.select(
         "doc_id",
         F.round(
             F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1)),
@@ -8755,18 +8715,18 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     round keeps the oracle replay exact as before."""
     d = 0.85
     docs = _t(spark, sf_dir, "documents")
-    edges = _track_persist(_host_edges(docs))
-    nodes = _track_persist(
+    edges = scoped_persist(_host_edges(docs))
+    nodes = scoped_persist(
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))
         .distinct()
     )
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # loop-invariant: per-edge out-degree attached ONCE; |hosts|-bounded
-    eo = _track_persist(edges.join(outdeg, "src"))
+    eo = scoped_persist(edges.join(outdeg, "src"))
     # dangling flag precomputed on the static node frame (outdeg.src is
     # distinct, so the left join is 1:1)
-    nodes_f = _track_persist(
+    nodes_f = scoped_persist(
         nodes.join(
             outdeg.select(F.col("src").alias("host"), F.lit(False).alias("__d")),
             "host",
@@ -9375,7 +9335,7 @@ def host_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smallest label). No collect; rounds are a fixed 3."""
     docs = _t(spark, sf_dir, "documents")
     edges = _host_edges(docs)
-    adj = _track_persist(
+    adj = scoped_persist(
         edges.select(F.col("src").alias("v"), F.col("dst").alias("n"))
         .union(edges.select(F.col("dst").alias("v"), F.col("src").alias("n")))
         .distinct()
@@ -11080,7 +11040,7 @@ def host_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _host_edges(docs).unionAll(
         docs.select(hubs[0].alias("src"), hubs[1].alias("dst"))
     ).unionAll(docs.select(hubs[1].alias("src"), hubs[2].alias("dst")))
-    edges = _track_persist(
+    edges = scoped_persist(
         raw.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
@@ -11098,7 +11058,7 @@ def host_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-aggregated the cached edge frame each time; |hosts|-bounded
     # (sources + 37 synthetic hubs). Interleaved A/B at sf0.1: min
     # neutral (2.10/2.10), med 2.54 -> 2.28.
-    deg = _track_persist(deg)
+    deg = scoped_persist(deg)
     # orient each edge low->high in the (degree, host) total order;
     # carry the head's order key so wedge endpoints can be ordered too
     du = deg.select(F.col("host").alias("u"), F.col("degree").alias("du"))
@@ -11106,7 +11066,7 @@ def host_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     low_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = _track_persist(
+    oriented = scoped_persist(
         edges.join(du, "u")
         .join(dv, "v")
         .select(
@@ -13326,7 +13286,7 @@ def market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem scans + the distinct shuffle run 2x extra. (long, long)
     # rows, disk-spillable. Interleaved A/B at sf0.1: neutral on mins
     # (1.63 vs 1.71), med 1.99 -> 1.79 — kept for the 100 TB scan count.
-    ob = _track_persist(
+    ob = scoped_persist(
         li.select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         ).distinct()
@@ -14777,7 +14737,7 @@ def acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ONE explode over lag structs (r16: the former 5-branch union
     planned the events rollup five times, guide §2.4)."""
     ev = _t(spark, sf_dir, "events")
-    daily = _track_persist(_daily_counts_dense(ev))
+    daily = scoped_persist(_daily_counts_dense(ev))
     wd = Window.partitionBy("event_type").orderBy("day")
     lags = [1, 2, 3, 7, 14]
     cols = [F.lead("c", k).over(wd).alias(f"l{k}") for k in lags]
@@ -16296,7 +16256,7 @@ def lead_lag_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     # calendar x |types|-bounded; persisted so the 4 lag branches (x2
     # sides each) read the rollup once instead of re-planning it 8x
-    daily = _track_persist(_daily_counts_dense(ev))
+    daily = scoped_persist(_daily_counts_dense(ev))
     out = None
     for k in [0, 1, 3, 7]:
         a = daily.select(
@@ -17692,14 +17652,14 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily rollup and the per-pair series persist (r16): both are
     self-joined, so each used to plan its events aggregation twice."""
     ev = _t(spark, sf_dir, "events")
-    daily = _track_persist(_daily_counts_dense(ev))
+    daily = scoped_persist(_daily_counts_dense(ev))
     a = daily.select(
         F.col("event_type").alias("ta"), "day", F.col("c").alias("x")
     )
     b = daily.select(
         F.col("event_type").alias("tb"), "day", F.col("c").alias("y")
     )
-    xy = _track_persist(a.join(b, "day").where(F.col("ta") < F.col("tb")))
+    xy = scoped_persist(a.join(b, "day").where(F.col("ta") < F.col("tb")))
     p1 = xy.select("ta", "tb", F.col("day").alias("d1"),
                    F.col("x").alias("x1"), F.col("y").alias("y1"))
     p2 = xy.select("ta", "tb", F.col("day").alias("d2"),
@@ -17772,7 +17732,7 @@ def theil_sen_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     daily = _daily_counts_dense(ev)
     wi = Window.partitionBy("event_type").orderBy("day")
-    idx = _track_persist(
+    idx = scoped_persist(
         daily.select(
             "event_type",
             (F.row_number().over(wi) - 1).alias("i"),
@@ -17850,7 +17810,7 @@ def grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax over the calendar-bounded daily frame, which persists
     (r16: it feeds both the moment rollup and the deviation join)."""
     ev = _t(spark, sf_dir, "events")
-    daily = _track_persist(_daily_counts_dense(ev))
+    daily = scoped_persist(_daily_counts_dense(ev))
     dc = F.col("c").cast("decimal(18,0)")
     mom = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -19910,8 +19870,8 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     # ^^^ position 50 — end of the r16 driver window ^^^
     # --- r15-certified (CORRECTNESS_r15.json, freshest) ---
     # (r17: ngram_jaccard_dups and dedup_clusters no longer share a
-    # persisted pair pipeline — release_persists() drains the dedup
-    # registry after each query, so suite order carries no timing bias.)
+    # persisted pair pipeline — a persist_scope around each query releases
+    # the dedup persists, so suite order carries no timing bias.)
     "multimodal_features": (multimodal_features, None),
     "sketch_distinct_users": (sketch_distinct_users, None),
     "sketch_value_quantiles": (sketch_value_quantiles, None),

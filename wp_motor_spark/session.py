@@ -7,9 +7,13 @@ On a real cluster only ``shuffle_partitions`` / memory knobs change.
 
 from __future__ import annotations
 
+import contextvars
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -52,7 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE re-plan (incl. partition coalescing) for persisted
-        # DataFrames too: off, every _track_persist intermediate keeps the
+        # DataFrames too: off, every scoped_persist intermediate keeps the
         # static shuffle-partition count, so tiny cached tables fan every
         # downstream stage out to N near-empty tasks (measured: 8-round
         # greedy loop over a 256k-row cache, 32->AQE-sized partitions cut
@@ -86,3 +90,42 @@ def get_spark(
                 os.environ.get("WP_DRIVER_MEM", _default_driver_mem()))
     )
     return builder.getOrCreate()
+
+
+#: persisted handles of the innermost open persist_scope, or None outside
+#: any scope. A ContextVar, so each thread (and asyncio task) sees only the
+#: scopes it opened itself.
+_SCOPE: contextvars.ContextVar[list[DataFrame] | None] = contextvars.ContextVar(
+    "wp_persist_scope", default=None
+)
+
+
+@contextmanager
+def persist_scope() -> Iterator[None]:
+    """Unpersist, on exit, every DataFrame that ``scoped_persist`` cached
+    inside the block — also when the block raises. A suite harness wraps
+    each query's build AND its action: unpersisting before the action
+    would only force recomputation, and without the release a later query
+    with a CacheManager-identical plan would replay this one's cache.
+    Scopes nest; a persist belongs to the innermost open scope."""
+    frame: list[DataFrame] = []
+    token = _SCOPE.set(frame)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for df in reversed(frame):
+            df.unpersist()
+
+
+def scoped_persist(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+) -> DataFrame:
+    """``df.persist(level)``, released when the innermost open
+    ``persist_scope`` exits. Outside any scope it is a plain persist and
+    the caller owns the handle."""
+    out = df.persist(level)
+    frame = _SCOPE.get()
+    if frame is not None:
+        frame.append(out)
+    return out

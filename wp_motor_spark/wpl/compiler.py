@@ -47,7 +47,9 @@ def _no_pushdown(c: Column) -> Column:
     scan has, while the materialized ``__parts`` projection runs it once
     post-spread. Measured on wpl_parse_clf at sf0.1: the pushed copy was
     the whole remaining single-threaded stage after the spread-scan
-    change."""
+    change. operators/dedup wraps its shingle-hash column the same way:
+    an inferred ``size(__sh) > 0`` filter pushed below the projection
+    re-ran the shingle tokenizer per row (4x on ngram_jaccard_dups)."""
     return F.shuffle(F.array(c)).getItem(0)
 
 # Residue acceptance threshold: unparsed tail <= 20% of line is "partial"
@@ -1435,7 +1437,7 @@ class CompiledRule:
         row, then a literal split. A memchr-style separator-scan plan (the
         reference's approach) was built and measured at ~10% SLOWER once
         its semantics-preserving validity checks are included — see
-        tools/fastpath_experiment.py and PROFILE.md §3."""
+        PROFILE.md §3 (experiment script in commit ed9c6fa)."""
         repl = DELIM.join(f"${i}" for i in range(1, self.n_groups + 1))
         pre = apply_preprocs(value, self.rule.preprocs)
         return F.split(F.regexp_replace(pre, self.pattern, repl), DELIM, -1)
@@ -1755,6 +1757,25 @@ class CompiledRule:
                         guard = g if guard is None else guard & g
         return guard
 
+    def match_guard_col(self, parts: Column) -> Column | None:
+        """Every guard of ``strict_guard_col`` and ``guard_col`` as one
+        predicate over the raw parts, for the first-match cascade: FALSE
+        exactly where ``extract`` demotes a matched row to miss (a NULL
+        guard demotes nothing there, so it passes here). None when the
+        rule has no guards. The typed field columns cost many JVM round
+        trips to build, and label() re-plans on every call (each
+        streaming micro-batch), so only rules with pipe or id_card guards
+        build them."""
+        piped = any(o.pipes or o.dtype == "id_card" for o in self.outputs)
+        ok: Column | None = None
+        for g in (
+            self.strict_guard_col(parts),
+            self.guard_col(dict(self.field_columns(parts))) if piped else None,
+        ):
+            if g is not None:
+                ok = g if ok is None else ok & g
+        return None if ok is None else F.coalesce(ok, F.lit(True))
+
     # -- user-facing --------------------------------------------------------
 
     def extract(self, df: DataFrame, col: str = "value", keep: list[str] | None = None) -> DataFrame:
@@ -1862,19 +1883,18 @@ class MultiParser:
     Adaptive rule reordering (parser.rs:119-134) is available as a
     plan-time step: ``optimized()`` resorts rules by sampled hit count
     (desc, ties by declared index — the reference's exact sort) and
-    returns a new parser. MEASURED (3-rule cascade, 90% hot rule, 2M
-    rows, best-of-3): materialized mode 0.9s regardless of order;
-    ``short_circuit=True`` 3.3s declared-order / 2.8s hot-first. So
-    reordering recovers ~16% inside the short-circuit plan but that
-    plan loses ~3x to materialization — the matched rule's regex
-    re-derives per struct-field reference inside its CASE branch,
-    while anchored non-matching regexes already fail fast. The
-    reference's win targets a scanning interpreter where skipping a
-    rule skips real work; under codegen the predictable R-evals plan
-    is the fast one. Default therefore stays materialized
-    declared-order; ``optimized()`` still matters semantically (it
+    returns a new parser. Under the materialized plan every rule's regex
+    runs once per row whatever the order, so reordering saves no work
+    here (a short-circuiting single-CASE plan, where order would matter,
+    measured ~3x slower: the matched rule's regex re-derives per struct
+    field inside its branch). ``optimized()`` matters semantically — it
     changes first-match winners for overlapping rules exactly as the
-    reference's resort does).
+    reference's resort does.
+
+    A rule's match guards (pipe functions, id_card checksums, json
+    validity — the checks ``extract`` demotes rows on) are part of its
+    cascade hit, so a row that fails them falls through to the next rule
+    and finally to miss, as in the reference's first-match loop.
     """
 
     def __init__(self, rules: list[CompiledRule | WplRule] | str):
@@ -1902,9 +1922,8 @@ class MultiParser:
         declared index. Returns a NEW MultiParser; the original order is
         untouched (the reference resorts in place every N events — here
         re-planning per batch gives the same window semantics). Order
-        only changes plan cost under ``label(short_circuit=True)`` —
-        and that mode measured slower than the default (see class
-        docstring), so this is primarily a semantics-parity API.
+        does not change plan cost (see class docstring), so this is a
+        semantics-parity API.
 
         NOTE on semantics: like the reference, reordering changes
         first-match winners when two rules both match a row. Safe (and
@@ -1923,53 +1942,7 @@ class MultiParser:
         mp.rules = [self.rules[i] for i in order]
         return mp
 
-    def _label_short_circuit(self, df: DataFrame, col: str) -> DataFrame:
-        """Single CASE chain producing struct(_rule,_disposition,_residue).
-
-        Each rule's regex is inlined in its own condition, so codegen
-        evaluates rules in order and stops at the first hit — the matched
-        rule's branch re-derives parts for the struct value (a bounded
-        constant re-evaluation for ONE rule), while every rule after the
-        hit costs nothing. The struct column is referenced 3x in the
-        outer projection, which blocks CollapseProject from inlining it
-        3x (non-cheap expr used more than once), so the chain runs once
-        per row. MEASURED SLOWER than the materialized default (~3x on
-        a 3-rule/90%-hot cascade): the per-branch parts re-derivation
-        outweighs the skipped rules. Kept as the mode where optimized()
-        ordering is observable, not as a fast path.
-        """
-        value = F.col(col)
-        chain: Column | None = None
-        for cr in self.rules:
-            parts = cr.parts_col(value)
-            disp = cr.disposition_col(value, parts)
-            hit = disp.isin("success", "partial")
-            branch = F.struct(
-                F.lit(cr.key).alias("r"),
-                disp.alias("d"),
-                cr.residue_col(parts).alias("s"),
-            )
-            chain = F.when(hit, branch) if chain is None else chain.when(hit, branch)
-        # Rust str::trim strips UNICODE White_Space (processor.rs
-        # batch_parse_package_skips_whitespace_miss pins "   \n\t";
-        # U+00A0/U+2028/U+3000-only lines are 'blank' in the reference
-        # too) — so the blank test is a Unicode-aware regex ((?U) turns
-        # on Java's UNICODE_CHARACTER_CLASS for \s), not an ASCII
-        # btrim set
-        blank = F.coalesce(value, F.lit("")).rlike(r"^(?U)\s*$")
-        tmp = df.select("*", chain.alias("__lab"))
-        return tmp.select(
-            *df.columns,
-            F.col("__lab.r").alias("_rule"),
-            F.when(blank, "blank")
-            .otherwise(F.coalesce(F.col("__lab.d"), F.lit("miss")))
-            .alias("_disposition"),
-            F.col("__lab.s").alias("_residue"),
-        )
-
-    def label(self, df: DataFrame, col: str = "value", short_circuit: bool = False) -> DataFrame:
-        if short_circuit:
-            return self._label_short_circuit(df, col)
+    def label(self, df: DataFrame, col: str = "value") -> DataFrame:
         value = F.col(col)
         # stage 1: one regex evaluation per rule per row, materialized
         # (behind the _no_pushdown barrier, like extract's __parts)
@@ -1987,6 +1960,9 @@ class MultiParser:
             parts = F.col(f"__parts_{i}")
             disp = cr.disposition_col(value, parts)
             hit = disp.isin("success", "partial")
+            guard = cr.match_guard_col(parts)
+            if guard is not None:
+                hit = hit & guard
             rule_c = (
                 F.when(hit, F.lit(cr.key)) if rule_c is None else rule_c.when(hit, F.lit(cr.key))
             )
