@@ -184,18 +184,17 @@ def _throughput_probe(spark, n: int = 8_000_000) -> dict:
     from pyspark.sql import functions as F
 
     from wp_motor_spark.oml.compiler import compile_oml
+    from wp_motor_spark.queries import _CLF_OML, _CLF_RULE
     from wp_motor_spark.wpl import compile_rule, parse_wpl
     from wp_motor_spark.wpl.generator import generate_lines
 
-    wpl = open("/root/reference/tests/instance/wpl/example/simple/parse.wpl").read()
-    oml = open("/root/reference/tests/instance/oml/example_adm.oml").read()
-    rule = parse_wpl(wpl)[0]
+    rule = parse_wpl(_CLF_RULE)[0]
     lines = generate_lines(spark, rule, n).persist()
     lines.count()  # materialize inputs so the probe times parse, not gen
 
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     cr = compile_rule(rule)
-    om = compile_oml(oml)
+    om = compile_oml(_CLF_OML)
 
     parsed = cr.extract(lines)
     out = om.apply(parsed.drop("value", "_rule", "_disposition", "_residue"))

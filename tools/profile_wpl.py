@@ -2,7 +2,8 @@
 
 Times each layer of the probe pipeline independently on the same persisted
 2M-line corpus so the per-row cost of regex / split / typed casts / OML /
-hash-forcing can be attributed. Run:
+hash-forcing can be attributed. The corpus is generated from the in-repo
+CLF rule and model (`queries._CLF_RULE` / `_CLF_OML`). Run:
 
     python tools/profile_wpl.py [n_rows]
 
@@ -21,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from wp_motor_spark.oml.compiler import compile_oml  # noqa: E402
+from wp_motor_spark.queries import _CLF_OML, _CLF_RULE  # noqa: E402
 from wp_motor_spark.session import get_spark  # noqa: E402
 from wp_motor_spark.wpl import compile_rule, parse_wpl  # noqa: E402
 from wp_motor_spark.wpl.generator import generate_lines  # noqa: E402
@@ -51,11 +53,9 @@ def main():
     spark = get_spark(app_name="profile_wpl")
     spark.sparkContext.setLogLevel("ERROR")
 
-    wpl = open("/root/reference/tests/instance/wpl/example/simple/parse.wpl").read()
-    oml = open("/root/reference/tests/instance/oml/example_adm.oml").read()
-    rule = parse_wpl(wpl)[0]
+    rule = parse_wpl(_CLF_RULE)[0]
     cr = compile_rule(rule)
-    om = compile_oml(oml)
+    om = compile_oml(_CLF_OML)
 
     lines = generate_lines(spark, rule, n).persist()
     lines.count()

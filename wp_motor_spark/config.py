@@ -154,6 +154,23 @@ def _toml(path: str) -> dict:
         return tomllib.load(f)
 
 
+def model_dirs(root: str, conf: dict) -> tuple[str, str]:
+    """The (wpl, oml) model roots. engine.rs defaults are ./models/{wpl,oml};
+    fall back to the bare ./wpl ./oml layout (the tests/instance tree) when
+    the canonical default is absent and no explicit conf overrides it."""
+    models = conf.get("models", {})
+
+    def one(key: str) -> str:
+        d = os.path.join(root, models.get(key, f"models/{key}"))
+        if key not in models and not os.path.isdir(d):
+            legacy = os.path.join(root, key)
+            if os.path.isdir(legacy):
+                return legacy
+        return d
+
+    return one("wpl"), one("oml")
+
+
 def load_workspace(root: str, out_root: str | None = None) -> Workspace:
     """Parse a reference-layout workspace. ``out_root``, when given,
     rebases every sink's relative output path (tests never write into the
@@ -166,21 +183,7 @@ def load_workspace(root: str, out_root: str | None = None) -> Workspace:
     if os.path.exists(conf_path):
         ws.conf = _toml(conf_path)
 
-    # model roots: engine.rs defaults are ./models/{wpl,oml}; fall back to
-    # the bare ./wpl ./oml layout (the tests/instance tree) when the
-    # canonical default is absent and no explicit conf overrides it
-    models = ws.conf.get("models", {})
-
-    def _model_dir(key: str) -> str:
-        d = os.path.join(root, models.get(key, f"models/{key}"))
-        if key not in models and not os.path.isdir(d):
-            legacy = os.path.join(root, key)
-            if os.path.isdir(legacy):
-                return legacy
-        return d
-
-    wpl_dir = _model_dir("wpl")
-    oml_dir = _model_dir("oml")
+    wpl_dir, oml_dir = model_dirs(root, ws.conf)
     topo = ws.conf.get("topology", {})
     src_dir = os.path.join(root, topo.get("sources", "topology/sources"))
     sink_dir = os.path.join(root, topo.get("sinks", "topology/sinks"))

@@ -29,13 +29,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wp_motor_spark.conditions import compile_condition
+from wp_motor_spark.config import _INFRA
 from wp_motor_spark.oml.compiler import OmlTransform, compile_oml
 from wp_motor_spark.sinks.formats import format_lines
 from wp_motor_spark.sinks.spec import SinkSpec
 from wp_motor_spark.wpl.compiler import MultiParser
 
 
-def _event_uuid(col: str | None, src_key: str | None):
+def _event_uuid(col: str, src_key: str | None):
     """Deterministic per-event UUID column (uuid-v4 shaped).
 
     md5(payload, src_key, monotonically_increasing_id) — all three inputs
@@ -45,10 +46,8 @@ def _event_uuid(col: str | None, src_key: str | None):
     evaluation. Mirrors the reference's one-PkgID-per-SourceEvent contract
     (src/core/parser/wpl_engine/processor.rs:143-150).
     """
-    parts = [F.monotonically_increasing_id().cast("string"),
+    parts = [F.col(col), F.monotonically_increasing_id().cast("string"),
              F.lit(src_key or "")]
-    if col is not None:
-        parts.insert(0, F.col(col))
     # unit-separator keeps the hash input injective: ("req4", id 12)
     # and ("req41", id 2) must not concatenate to the same bytes
     h = F.md5(F.concat_ws("\x1f", *parts))
@@ -157,11 +156,7 @@ class Pipeline:
             # wp_src_key from the source identifier, wp_src_ip passthrough
             # (net sources attach it; file sources have no upstream peer).
             # Declared only-if-absent; unused ones die in column pruning.
-            if "wp_event_id" not in ok.columns:  # belt-and-braces: set at ingest
-                ok = ok.withColumn(
-                    "wp_event_id",
-                    _event_uuid(col if col in ok.columns else None, self.src_key),
-                )
+            # wp_event_id was added at ingest above and parse() keeps it.
             if "wp_src_key" not in ok.columns:
                 ok = ok.withColumn(
                     "wp_src_key",
@@ -220,15 +215,11 @@ class Pipeline:
         all sinks whose condition matches (oml.rs:351-363); infra channels
         (miss/residue/error) go to same-named sinks when declared."""
         result = PipelineResult(branches=self.transform(raw, col))
-        # intercept was REMOVED from the infra set entirely
-        # (infrastructure.rs:107 "intercept 组彻底移除", constants.rs
-        # INFRA_GROUPS, orchestrator/constants/tests.rs:42): a sink named
-        # "intercept" is an ordinary business sink and joins the
-        # condition fan-out like any other name
-        infra = {"miss", "residue", "error", "default", "monitor"}
-        data_branches = {k: v for k, v in result.branches.items() if k not in infra}
+        # a sink named "intercept" is an ordinary business sink (see
+        # config._INFRA) and joins the condition fan-out like any other name
+        data_branches = {k: v for k, v in result.branches.items() if k not in _INFRA}
         for spec in self.sinks:
-            if spec.name in infra:
+            if spec.name in _INFRA:
                 src = result.branches.get(spec.name)
                 if src is not None:
                     result.sink_lines[spec.name] = format_lines(
@@ -239,7 +230,7 @@ class Pipeline:
             for key, df in data_branches.items():
                 # sink groups select which OML models feed them
                 # (sink.toml `oml = [...]`, dispatcher/oml.rs:59-70)
-                model_name = getattr(self, "_branch_model", {}).get(key, "")
+                model_name = self._branch_model.get(key, "")
                 if not _model_selected(spec.models, model_name):
                     continue
                 # rule-key selection (route file `rule = [...]`; branches

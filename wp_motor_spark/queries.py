@@ -846,7 +846,7 @@ def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     BMP images are synthesized per doc (pure-Python encoder), then probed
     and feature-extracted through the actual decode path (imagecodec.py
     — no stub involved for BMP). Rows-only check; pixel-level parity
-    gates live in tests/test_imagecodec.py."""
+    gates live in tests/test_imagecodec.py and tests/test_quality.py."""
     import pandas as pd
 
     from wp_motor_spark.operators import multimodal as mm
@@ -891,7 +891,8 @@ def image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     10th doc is a brightness-shifted copy of its predecessor; pHash
     (real decode -> 32x32 DCT fingerprint) + the pigeonhole block join
     finds exactly those planted pairs. Rows-only; pixel-level parity and
-    invariance gates in tests/test_imagecodec.py."""
+    invariance gates in tests/test_imagecodec.py; exact pair-set parity
+    in tests/test_quality.py."""
     import pandas as pd
 
     from wp_motor_spark.operators import multimodal as mm
@@ -1630,8 +1631,8 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     same switch `neardup_pagerank` made. Rows-only for the driver: the
     bucketed pairs are a recall-gated (>= 0.9, measured 0.97) SUBSET of
     the exact pairs, so components can be finer and the kept set a
-    SUPERSET of the exact kept set — gated in tests/test_quality.py /
-    QUALITY_r{N}.json (kept-set superset + <= 1% extra kept). The exact
+    SUPERSET of the exact kept set — gated in tests/test_quality.py
+    (kept-set superset + <= 1% extra kept). The exact
     all-pairs baseline stays available as `embedding_neardup`
     (oracle-exact), which the recall gates compare against."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -2681,7 +2682,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL BPE token counting: merges trained on the bounded
     deterministic sample, broadcast into an Arrow encoder; per-doc
     whitespace vs BPE token counts + compression ratio. Rows-only (no SQL
-    BPE); round-trip/parity gates in tests/test_bpe.py and QUALITY_r4.json.
+    BPE); round-trip/parity gates in tests/test_bpe.py and tests/test_quality.py.
 
     Training runs on EVERY invocation (r17): the former per-(session, sf)
     merge cache survived spark.catalog.clearCache(), so a bench's pass-2
@@ -2849,7 +2850,7 @@ def compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc zlib compression ratio — the redundancy quality signal
     (machine-generated loops compress far below prose). Rows-only: DuckDB
     has no DEFLATE; byte-identical parity with driver-side zlib is gated
-    in tests/test_curate.py."""
+    in tests/test_curate.py and tests/test_quality.py."""
     docs = _t(spark, sf_dir, "documents")
     ratio = text.compression_ratio_udf()
     return docs.select(
@@ -2898,7 +2899,7 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample refinement, distributed Arrow GEMM assignment), aggregated to
     per-cluster size and mean similarity. Rows-only check (k-means is
     iterative, not SQL); inertia/assignment gates live in
-    tests/test_quality.py and QUALITY_r4.json."""
+    tests/test_quality.py."""
     emb = _t(spark, sf_dir, "embeddings")
     a = similarity.kmeans_assign(emb, n_cells=8, kmeans_iters=5)
     return (
@@ -4978,7 +4979,7 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Jegou et al. 2011 §IV). Rows-only for the driver (iterative
     codebooks); the recall gate (>= 0.8 @5 vs brute force; measured
     0.92 on the worst-case random synthetic embeddings) lives in
-    tests/test_quality.py and QUALITY_r{N}.json.
+    tests/test_quality.py.
 
     Scale shape: see operators/similarity.py::pq_topk — map-only
     Arrow-batched LUT scoring over codes (32x smaller than vectors),
@@ -5079,7 +5080,7 @@ def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-rerank the top-200. Rows-only for the driver (iterative
     codebooks); recall gate >= 0.8 @5 vs brute force (measured 0.90 at
     sf0.001 / 0.86 at sf0.01 on worst-case random embeddings) in
-    tests/test_quality.py and QUALITY_r{N}.json.
+    tests/test_quality.py.
 
     Scale shape: see operators/similarity.py::ivf_pq_topk — the index
     frame is (id, cell, codes), candidates come from a broadcast hash
@@ -5097,8 +5098,8 @@ def pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (32x compression) + reconstruction cosine. Rows-only for the driver
     (k-means codebooks are iterative, not SQL-expressible); the numeric
     gate lives in tests/test_quality.py::
-    test_pq_codes_deterministic_and_beats_single_codebook and
-    QUALITY_r{N}.json (deterministic codes; avg recon_cos beats the
+    test_pq_codes_deterministic_and_beats_single_codebook
+    (deterministic codes; avg recon_cos beats the
     m=1 single-codebook baseline and the 0.6 floor).
 
     Scale shape: see operators/similarity.py::pq_codes — bounded
@@ -5905,8 +5906,7 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks the CANONICAL copy inside a duplication cluster and weights
     crawl importance before sampling. Rows-only for the driver
     (iterative); the gates (ranks sum to 1, isolated nodes at the
-    (1-d)/N baseline, hubs outrank leaves) live in tests/test_quality.py
-    and QUALITY_r{N}.json.
+    (1-d)/N baseline, hubs outrank leaves) live in tests/test_quality.py.
 
     Scale shape: the edge list comes from the CLUSTER-BOUNDED pair
     generator (operators/dedup.py::cluster_neardup_pairs — k-means cells
@@ -5933,8 +5933,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     that replaces `embedding_neardup_pairs`' all-pairs O(n^2) scan.
     Rows-only for the driver (k-means is iterative); the exactness gate
     (every drop justified by a kept near-neighbor in-cluster, no kept
-    pair above threshold) lives in tests/test_quality.py and
-    QUALITY_r{N}.json.
+    pair above threshold) lives in tests/test_quality.py.
 
     Scale shape: see operators/dedup.py::semdedup — map-only assignment
     against broadcast centroids, ONE cluster-keyed shuffle, greedy prune
@@ -6320,7 +6319,7 @@ def jl_projection_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. Rows-only for the driver (engine-seeded numpy projection); the
     rerank-recall@5 gate vs full-dim exact top-k (measured 1.0 at
     sf0.001 on worst-case random embeddings, floor 0.8) lives in
-    tests/test_quality.py and QUALITY_r{N}.json.
+    tests/test_quality.py.
 
     Scale shape: see operators/similarity.py::jl_rerank_topk — map-only
     projection (matrix regenerated deterministically inside the Arrow
@@ -6807,8 +6806,8 @@ def ewma_anomaly_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct accumulators (list appends drop prior state; the var
     recurrence reads a stale mean — both reproduced in isolation), so
     no SQL oracle can express the fold; the gate is an EXACT driver-side
-    python recompute of the recurrence (tests/test_quality.py,
-    QUALITY_r{N}), the same discipline as the streaming op's gate.
+    python recompute of the recurrence (tests/test_quality.py),
+    the same discipline as the streaming op's gate.
 
     Scale shape (CHUNKED affine fold, r15 — the burst_detection
     treatment): the EWMA state COMPOSES. Over a chunk, the exit mean is
@@ -6973,7 +6972,7 @@ def embedding_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZCA whitening (Kessy et al. 2018) of the embedding corpus — the
     decorrelation pre-step before cosine retrieval / linear probes.
     Rows-only for the driver (eigendecomposition is engine-specific
-    LAPACK); the gate (tests/test_quality.py, QUALITY_r{N}) checks the
+    LAPACK); the gate (tests/test_quality.py) checks the
     whitened corpus covariance IS the identity within tolerance — the
     defining property, verified on the operator's own output. Output is
     the exploded (vec_id, dim, white_val) long form: every column is a
@@ -7001,7 +7000,7 @@ def coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup family uses (unigrams saturate a small vocab after one pick).
     Emits (rank, doc_id, gain) for 8 rounds. Rows-only for the
     driver (iterative); the gate recomputes the greedy sequence exactly
-    in python (tests/test_quality.py, QUALITY_r{N}).
+    in python (tests/test_quality.py).
 
     Scale shape: operators/curate.py::coverage_select_greedy — the
     distinct (doc, token) table shuffles ONCE and persists; each round
@@ -7404,7 +7403,7 @@ def kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     EMBEDDING space, the selection step of core-set active learning and
     of diverse eval-slice picks. Rows-only for the driver (iterative);
     the gate recomputes the greedy sequence exactly in python
-    (tests/test_quality.py, QUALITY_r{N}).
+    (tests/test_quality.py).
 
     Scale shape: operators/similarity.py::kcenter_greedy — one running
     min-distance scalar per row, k map-only update rounds + 1-row
@@ -7428,7 +7427,7 @@ def burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically (days 10-14 compress 20x at integer-microsecond
     floor division). Emits one row per detected burst interval.
     Rows-only for the driver (sequential Viterbi); the gate recomputes
-    the exact python Viterbi (tests/test_quality.py, QUALITY_r{N}).
+    the exact python Viterbi (tests/test_quality.py).
 
     Scale shape (CHUNKED min-plus Viterbi, r15): two-state Viterbi is
     associative — each gap is a 2x2 cost matrix over the (min, +)
@@ -8950,7 +8949,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. Ties break lexicographically (count desc, left asc, right
     asc) so the merge table is deterministic. Rows-only for the driver
     (iterative); the gate recomputes the full merge sequence exactly in
-    python (tests/test_quality.py, QUALITY_r{N}).
+    python (tests/test_quality.py).
 
     Scale shape: training iterates over the COMPACT (word, freq) table
     (|vocab| rows — the standard distributed-BPE state), not the
@@ -9897,8 +9896,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     diversity-aware rerank RAG stacks apply on top of raw ANN lists
     so near-duplicate passages don't crowd the context window.
     Rows-only for the driver (iterative greedy); the gate recomputes
-    the exact pick sequence in python (tests/test_quality.py,
-    QUALITY_r{N}).
+    the exact pick sequence in python (tests/test_quality.py).
 
     Scale shape: candidate generation is the two-phase exact top-K;
     the pairwise candidate sims are |Q| x 20 x 20 (bounded by the
@@ -15083,7 +15081,7 @@ def bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same fit that ranks models from pairwise human preferences,
     here ranking SOURCES from document-quality duels. Rows-only for
     the driver (iterative fit); the gate recomputes the duels and the
-    exact MM sequence in python (tests/test_quality.py, QUALITY_r{N}).
+    exact MM sequence in python (tests/test_quality.py).
 
     Scale shape: rank windows per bounded group mint <=25 duels/group;
     the wins matrix is |sources|^2-BOUNDED and collects once (the
@@ -15575,7 +15573,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only for the driver (the pooling is sequential); PAVA runs
     DRIVER-SIDE on the 100-row bounded bin table (the bradley_terry
     collect discipline), and the gate recomputes it exactly in python
-    (tests/test_quality.py, QUALITY_r{N}).
+    (tests/test_quality.py).
 
     Scale shape: one 100-bin rollup (corpus-scale work is one agg);
     everything after is O(bins) on the driver."""

@@ -16,20 +16,40 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _default_driver_mem() -> str:
-    """min(24g, ~25% of system RAM), floor 2g — the 24g local[32] bench
-    sizing, degraded gracefully on smaller hosts. Detection reads
-    MemTotal (Linux); anything unreadable falls back to the 24g bench
-    default, and WP_DRIVER_MEM always wins (see caller)."""
+#: cgroup memory limits: v2 ``memory.max`` (the text ``max`` = no limit)
+#: and v1 ``memory.limit_in_bytes`` (a huge sentinel = no limit)
+_CGROUP_MEM_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _default_driver_mem(
+    meminfo: str = "/proc/meminfo", cgroup_limits: tuple[str, ...] = _CGROUP_MEM_LIMITS
+) -> str:
+    """min(24g, ~25% of usable RAM), floor 2g — the 24g local[32] bench
+    sizing, degraded gracefully on smaller hosts. Usable RAM is MemTotal
+    capped by the cgroup memory limit: inside a container MemTotal is the
+    host's memory. A "no limit" marker is either not a number or larger
+    than MemTotal, so it drops out of the min. Nothing readable falls
+    back to the 24g bench default; WP_DRIVER_MEM always wins (see caller)."""
+    sizes = []
     try:
-        with open("/proc/meminfo") as fh:
+        with open(meminfo) as fh:
             for line in fh:
                 if line.startswith("MemTotal:"):
-                    total_gib = int(line.split()[1]) / (1024 * 1024)
-                    return f"{max(2, min(24, int(total_gib // 4)))}g"
+                    sizes.append(int(line.split()[1]) * 1024)
     except OSError:
         pass
-    return "24g"
+    for path in cgroup_limits:
+        try:
+            with open(path) as fh:
+                sizes.append(int(fh.read().strip()))
+        except (OSError, ValueError):
+            pass
+    if not sizes:
+        return "24g"
+    return f"{max(2, min(24, min(sizes) // (4 * 2**30)))}g"
 
 
 def get_spark(
@@ -83,9 +103,9 @@ def get_spark(
         # 24g is ~20% of the 128 GiB bench box, leaving room for Python
         # workers; on a real cluster spark.executor.memory is sized
         # separately and this knob only feeds the (small) driver. r17
-        # (ADVICE): the default is capped at ~25% of detected system
-        # memory so a cgroup-limited dev/CI host doesn't fail to start a
-        # 24g JVM; WP_DRIVER_MEM still overrides outright.
+        # (ADVICE): the default is capped at ~25% of MemTotal or the cgroup
+        # limit, whichever is lower, so a memory-limited container doesn't
+        # fail to start a 24g JVM; WP_DRIVER_MEM still overrides outright.
         .config("spark.driver.memory",
                 os.environ.get("WP_DRIVER_MEM", _default_driver_mem()))
     )

@@ -126,9 +126,11 @@ def cmd_init(root: str, mode: str) -> int:
 
 
 def _model_dirs(root: str) -> tuple[str, str]:
-    """Configured model roots (engine.rs defaults ./models/{wpl,oml} with
-    the bare ./wpl ./oml legacy fallback — same rules as load_workspace)."""
+    """Configured model roots, by load_workspace's rule (config.model_dirs);
+    an unreadable conf counts as empty here — the conf check reports it."""
     import tomllib
+
+    from wp_motor_spark.config import model_dirs
 
     conf: dict = {}
     p = os.path.join(root, "conf", "wparse.toml")
@@ -137,17 +139,7 @@ def _model_dirs(root: str) -> tuple[str, str]:
             conf = tomllib.load(open(p, "rb"))
         except Exception:  # noqa: BLE001 - conf check reports this itself
             conf = {}
-    models = conf.get("models", {})
-
-    def one(key: str) -> str:
-        d = os.path.join(root, models.get(key, f"models/{key}"))
-        if key not in models and not os.path.isdir(d):
-            legacy = os.path.join(root, key)
-            if os.path.isdir(legacy):
-                return legacy
-        return d
-
-    return one("wpl"), one("oml")
+    return model_dirs(root, conf)
 
 
 def _checks(root: str, what: set[str]):
