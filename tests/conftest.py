@@ -15,7 +15,28 @@ def spark():
     s.stop()
 
 
+# The wp-motor source checkout the reference-parity tests read golden
+# values from; the repo does not hold it, so those tests skip without it.
 REF = "/root/reference"
+
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REF),
+    reason=f"reads the wp-motor reference checkout at {REF}, which is absent",
+)
+
+# In-repo F1 fixture (FIXTURES.md §F1): the nginx rule, its one sample
+# line, and a model holding only the documented statements.
+EXAMPLE_SIMPLE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "example_simple"
+)
+
+
+def example_simple(name: str) -> str:
+    """Text of one file of the in-repo F1 fixture."""
+    with open(os.path.join(EXAMPLE_SIMPLE, name)) as fh:
+        return fh.read()
+
+
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 

@@ -1,22 +1,27 @@
 """CLI end-to-end: the MIGRATION.md invocations actually work in-process
-(main(argv) — same code path as python -m wp_motor_spark.cli) against
-the reference's own fixture rules and sample logs."""
+(main(argv) — same code path as python -m wp_motor_spark.cli).
+
+The wpgen -> wparse round trip and the wprescue argument check run on the
+in-repo F1 fixture (tests/fixtures/example_simple: rule + model). The
+tests marked needs_reference check golden values of the reference
+checkout's own instance (its sample.dat, its conf/wpgen.toml) and skip
+when that tree is absent."""
 
 from __future__ import annotations
 
 import os
 
+from conftest import EXAMPLE_SIMPLE, REF, needs_reference
 from wp_motor_spark.cli import main
 
-REF = "/root/reference/tests/instance/wpl/example/simple"
-OML = "/root/reference/tests/instance/oml"
+INSTANCE = f"{REF}/tests/instance"
 
 
 def test_wpgen_then_wparse_round_trip(spark, tmp_path):
-    """Generate lines from the reference nginx rule, then parse them back
+    """Generate lines from the F1 nginx rule, then parse them back
     through the CLI batch path — generator/parser duality at the binary
     surface."""
-    wpl = f"{REF}/parse.wpl"
+    wpl = f"{EXAMPLE_SIMPLE}/parse.wpl"
     gen_out = str(tmp_path / "gen")
     rc = main(["wpgen", "--wpl", wpl, "-n", "50", "--out", gen_out, "--seed", "7"])
     assert rc == 0
@@ -29,7 +34,7 @@ def test_wpgen_then_wparse_round_trip(spark, tmp_path):
     sink = str(tmp_path / "parsed")
     miss = str(tmp_path / "miss")
 
-    oml = f"{OML}/example_adm.oml"
+    oml = f"{EXAMPLE_SIMPLE}/model.oml"
     rc = main([
         "wparse", "--wpl", wpl, "--oml", oml,
         "--input", gen_out,
@@ -46,6 +51,7 @@ def test_wpgen_then_wparse_round_trip(spark, tmp_path):
     assert len(parsed) == 50
 
 
+@needs_reference
 def test_wparse_on_reference_sample(spark, tmp_path):
     """The reference's own sample.dat through the CLI with its own rule."""
     sink = str(tmp_path / "out")
@@ -53,8 +59,8 @@ def test_wparse_on_reference_sample(spark, tmp_path):
     # semantics — data sink groups select OML models), so the catch-all
     # sink must be named `default`
     rc = main([
-        "wparse", "--wpl", f"{REF}/parse.wpl",
-        "--input", f"{REF}/sample.dat",
+        "wparse", "--wpl", f"{INSTANCE}/wpl/example/simple/parse.wpl",
+        "--input", f"{INSTANCE}/wpl/example/simple/sample.dat",
         "--sink", f"default={sink}:kv",
     ])
     assert rc == 0
@@ -68,7 +74,7 @@ def test_wparse_on_reference_sample(spark, tmp_path):
 
 
 def test_wprescue_requires_a_source(spark):
-    rc = main(["wprescue", "--wpl", f"{REF}/parse.wpl"])
+    rc = main(["wprescue", "--wpl", f"{EXAMPLE_SIMPLE}/parse.wpl"])
     assert rc == 2
 
 
@@ -146,13 +152,14 @@ connect = "file_json_sink"
     assert len(lines) == 8
 
 
+@needs_reference
 def test_wpgen_config_mode_v1_instance(spark, tmp_path):
     """The instance's own conf/wpgen.toml (v1 [main_conf] gen_count=1000,
     out_ref -> [out_file] target path ./src_dat/gen.dat)."""
     import shutil
 
     root = tmp_path / "instance"
-    shutil.copytree("/root/reference/tests/instance", root)
+    shutil.copytree(INSTANCE, root)
     rc = main([
         "wpgen",
         "--config", str(root / "conf" / "wpgen.toml"),

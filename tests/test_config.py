@@ -1,17 +1,24 @@
-"""Workspace config loader tests against the reference's own
+"""Workspace config loader tests.
+
+The tests marked needs_reference load the reference checkout's own
 tests/instance/ project tree (the same workspace its integration tests
-load via WpApp::try_from)."""
+load via WpApp::try_from) and check its golden values; they skip when
+that tree is absent. The skip_parse/skip_sink switch test runs on the
+`wproj init --mode full` scaffold instead; the rest build their own
+workspaces under tmp_path."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF, needs_reference
 from wp_motor_spark.config import build_pipeline, load_workspace
 
-INSTANCE = "/root/reference/tests/instance"
+INSTANCE = f"{REF}/tests/instance"
 
 
+@needs_reference
 def test_load_workspace(tmp_path):
     ws = load_workspace(INSTANCE, out_root=str(tmp_path))
     assert ws.parallel == 2
@@ -40,6 +47,7 @@ def test_load_workspace(tmp_path):
         ]
 
 
+@needs_reference
 def test_workspace_end_to_end(spark, tmp_path):
     """Assemble from config and run the instance sample through it."""
     ws = load_workspace(INSTANCE, out_root=str(tmp_path))
@@ -52,6 +60,7 @@ def test_workspace_end_to_end(spark, tmp_path):
     assert "dev_src_ip=10.0.0.1" in kv  # source tag from wpsrc.toml
 
 
+@needs_reference
 def test_instance_workspace_full_e2e(spark, tmp_path):
     """The whole workspace driven like the reference's own integration run
     (tests/instance, WpApp::try_from): wpgen rule mode fills the configured
@@ -172,6 +181,7 @@ def test_victorialogs_sink_through_connector_registry(spark, tmp_path):
         srv.shutdown()
 
 
+@needs_reference
 def test_write_batch_to_configured_paths(spark, tmp_path):
     ws = load_workspace(INSTANCE, out_root=str(tmp_path))
     pipe, _ = build_pipeline(ws)
@@ -187,6 +197,7 @@ def test_write_batch_to_configured_paths(spark, tmp_path):
     assert spark.read.text(miss_dir).collect()[0]["value"] == "unparseable junk ###"
 
 
+@needs_reference
 def test_daemon_checkpoint_restart_infra_parity(spark, tmp_path):
     """wparse daemon (service.rs:96-101) as Structured Streaming: the
     foreachBatch daemon over the instance workspace, killed after batch 1
@@ -335,12 +346,21 @@ def test_skip_parse_and_skip_sink_stage_switches(tmp_path, spark):
     """engine.rs skip_parse/skip_sink: skip_parse removes every batch
     input (the pick/parse stage never starts); skip_sink builds the
     pipeline with no delivery sinks."""
-    import shutil
+    from wp_motor_spark.wproj import main as wproj
 
-    root = tmp_path / "instance"
-    shutil.copytree(INSTANCE, root)
+    root = tmp_path / "ws"
+    assert wproj(["init", "-w", str(root), "--mode", "full"]) == 0
+    (root / "data" / "demo.dat").write_text(
+        '2024-01-01T00:00:00Z 10.0.0.1 200 "hello"\n'
+    )
+    # precondition: without the switches the scaffold has an input to
+    # read and sinks to deliver to, so the empty lists below are theirs
+    ws = load_workspace(str(root), out_root=str(tmp_path / "out"))
+    pipe, inputs = build_pipeline(ws)
+    assert inputs and pipe.sinks
+
     conf = (root / "conf" / "wparse.toml").read_text()
-    # PREPEND: the instance file ends inside a [[stat.sink]] table, so an
+    # PREPEND: the scaffold's conf ends inside its [stat] table, so an
     # appended key would belong to that table, not the top level
     (root / "conf" / "wparse.toml").write_text(
         "skip_parse = true\nskip_sink = true\n" + conf

@@ -6,6 +6,7 @@ import os
 
 import pytest
 
+from conftest import REF, needs_reference
 from wp_motor_spark.connectors import (
     ConnectorNotFound,
     ConnectorRegistry,
@@ -157,20 +158,22 @@ def test_registry_upward_search(tmp_path):
     assert reg is not None and "file_main" in reg.connectors
 
 
+@needs_reference
 def test_instance_sink_registry_resolution(tmp_path):
     """The reference instance tree's connectors/sink.d/file_raw_sink must
     resolve through the registry (not the name heuristic): infra sinks get
     their base/file params via the allow_override whitelist."""
     from wp_motor_spark.config import load_workspace
 
-    ws = load_workspace("/root/reference/tests/instance", out_root=str(tmp_path))
-    reg = ConnectorRegistry.load("/root/reference/tests/instance", "sink")
+    ws = load_workspace(f"{REF}/tests/instance", out_root=str(tmp_path))
+    reg = ConnectorRegistry.load(f"{REF}/tests/instance", "sink")
     assert reg is not None and "file_raw_sink" in reg.connectors
     assert reg.connectors["file_raw_sink"].allow_override == ["base", "file"]
     miss = next(s for s in ws.sinks if s.name == "miss")
     assert miss.format == "raw" and miss.path.endswith("miss.dat")
 
 
+@needs_reference
 def test_workspace_v2_source_e2e(spark, tmp_path):
     """A v2 [[sources]] workspace: connector registry + params_override
     feed build_pipeline's input list end-to-end."""
@@ -179,7 +182,7 @@ def test_workspace_v2_source_e2e(spark, tmp_path):
     from wp_motor_spark.config import build_pipeline, load_workspace
 
     root = tmp_path / "instance"
-    shutil.copytree("/root/reference/tests/instance", root)
+    shutil.copytree(f"{REF}/tests/instance", root)
     data = root / "src_dat"
     data.mkdir()
     (data / "v2.dat").write_text("222.133.52.20 - - [06/Aug/2019:12:12:19 +0800] "

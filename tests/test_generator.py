@@ -4,12 +4,11 @@ rule (reference: tests/wpgen_rule_exec.rs generator/parser duality)."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF, example_simple, needs_reference
 from wp_motor_spark.wpl import compile_rule, parse_wpl
 from wp_motor_spark.wpl.generator import generate_lines
 
-REF = "/root/reference"
-
-NGINX_WPL = open(f"{REF}/tests/instance/wpl/example/simple/parse.wpl").read()
+NGINX_WPL = example_simple("parse.wpl")  # F1 (FIXTURES.md)
 
 CLF_RULE = """
 rule clf {
@@ -76,6 +75,7 @@ def test_rule_generator_24_field_round_trip(spark):
     assert by_disp == {"success": 50}
 
 
+@needs_reference
 def test_gen_field_toml_scopes(spark):
     """gen_field.toml (FieldsGenRule, generator/rule.rs): the instance's
     own sip ip-scope constrains generated addresses to [beg, end], and the
@@ -88,7 +88,7 @@ def test_gen_field_toml_scopes(spark):
         load_gen_field_overrides,
     )
 
-    inst = "/root/reference/tests/instance/wpl/example/simple"
+    inst = f"{REF}/tests/instance/wpl/example/simple"
     rule = parse_wpl(open(f"{inst}/gen_rule.wpl").read())[0]
     ov = load_gen_field_overrides(open(f"{inst}/gen_field.toml").read())
     assert ov == {"sip": {"ip_range": ("10.0.10.0", "10.0.100.255")}}

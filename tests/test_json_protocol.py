@@ -16,11 +16,10 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF, needs_reference
 from wp_motor_spark.wpl import compile_rule, parse_wpl
 
-REF_JSON = (
-    "/root/reference/crates/wp-lang/src/eval/value/parser/protocol/json.rs"
-)
+REF_JSON = f"{REF}/crates/wp-lang/src/eval/value/parser/protocol/json.rs"
 
 
 def _fixture(name: str) -> str:
@@ -85,6 +84,7 @@ def test_json_flatten_map(spark):
     assert r["json"] == {"p": r"c:\\u\\f", "n/q": r"a\nb"}
 
 
+@needs_reference
 def test_json_tianyan_wildcards(spark):
     """json.rs test_json_tianyan/2/3 over the reference's own LONG_DATA:
     `_@_origin*` (name-prefix wildcard) + `_@payload/packet_data` leave
@@ -122,6 +122,7 @@ def test_json_tianyan_wildcards(spark):
     assert d == {"alarm_sip": "10.111.6.136", "_origin/sip": "10.111.134.201"}
 
 
+@needs_reference
 def test_json_multiline_and_ws_residue(spark):
     """The serde reader spans newlines (LONG_DATA is pretty-printed) and
     a trailing '\\n' is whitespace residue = full consumption (jt1/jt2

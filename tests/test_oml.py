@@ -3,6 +3,8 @@
 Golden sources: tests/instance/oml/*.oml, the T4 complete example
 (docs/usage/zh/04-oml/07-complete-example.md), and the static-blocks doc
 (docs/usage/en/04-oml/functions/static_blocks.md) — SURVEY.md §5.
+The tests that read the reference checkout's own files are marked
+needs_reference and skip when that tree is absent.
 """
 
 import re
@@ -10,16 +12,16 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF, example_simple, needs_reference
 from wp_motor_spark.oml.compiler import compile_oml
 from wp_motor_spark.oml.parser import parse_oml
 from wp_motor_spark.wpl import compile_rule, parse_wpl
-
-REF = "/root/reference"
 
 
 # ---------------------------------------------------------------- parsing
 
 
+@needs_reference
 def test_parse_reference_fixtures():
     bench = parse_oml(open(f"{REF}/tests/instance/oml/benchmark.oml").read())
     assert bench.name == "benchmark"
@@ -31,6 +33,7 @@ def test_parse_reference_fixtures():
     assert adm.statements[-1].targets == ["*"]
 
 
+@needs_reference
 def test_parse_t4_complete_example():
     doc = open(f"{REF}/docs/usage/zh/04-oml/07-complete-example.md").read()
     oml_text = re.search(r"```oml\n(.*?)```", doc, re.S).group(1)
@@ -41,6 +44,7 @@ def test_parse_t4_complete_example():
 # --------------------------------------------------------------- compiling
 
 
+@needs_reference
 def test_benchmark_model(spark):
     tr = compile_oml(open(f"{REF}/tests/instance/oml/benchmark.oml").read())
     assert tr.matches("benchmark/benchmark_1")
@@ -60,6 +64,7 @@ def test_benchmark_model(spark):
     assert row["extra"] == "x"  # * = take() passthrough
 
 
+@needs_reference
 def test_benchmark_defaults(spark):
     tr = compile_oml(open(f"{REF}/tests/instance/oml/benchmark.oml").read())
     df = spark.createDataFrame([("SN1",)], ["sn"])
@@ -151,6 +156,7 @@ T4_EXPECT = {
 }
 
 
+@needs_reference
 def test_t4_outputs(t4_result):
     cols, row = t4_result
     bad = {}
@@ -161,6 +167,7 @@ def test_t4_outputs(t4_result):
     assert not bad, bad
 
 
+@needs_reference
 def test_t4_collect_wildcards(t4_result):
     cols, row = t4_result
     assert row["collected_ports"] == ["8080", "9090"]
@@ -226,6 +233,7 @@ v = select val from wide where k1 = read(a) and k2 = read(b) and k3 = read(c) an
     assert row["v"] is None
 
 
+@needs_reference
 def test_ignore_model_passthrough(spark):
     tr = compile_oml(open(f"{REF}/tests/instance/oml/ignore.oml").read())
     df = spark.createDataFrame([("a", "b")], ["f1", "f2"])
@@ -288,7 +296,7 @@ def test_enable_header(spark):
 
     from wp_motor_spark.pipeline import Pipeline
 
-    wpl = open(f"{REF}/tests/instance/wpl/example/simple/parse.wpl").read()
+    wpl = example_simple("parse.wpl")
     oml_off = "name : m\nenable : false\n---\nout = chars(never);"
     pipe = Pipeline(wpl=wpl, omls=[oml_off])
     assert pipe.models == []
@@ -396,6 +404,7 @@ def test_json_unescape_escaped_backslash(spark):
     assert vals[3] == "p\\\\q"     # \\\\ -> two backslashes
 
 
+@needs_reference
 def test_complete_example_golden(spark):
     """The reference's full OML feature showcase (docs/usage/zh/04-oml/
     07-complete-example.md): the ENTIRE program — literals, option/default
@@ -408,9 +417,7 @@ def test_complete_example_golden(spark):
     from wp_motor_spark.oml.compiler import compile_oml
     from wp_motor_spark.wpl import compile_rule, parse_wpl
 
-    doc = open(
-        "/root/reference/docs/usage/zh/04-oml/07-complete-example.md"
-    ).read()
+    doc = open(f"{REF}/docs/usage/zh/04-oml/07-complete-example.md").read()
     oml = re.findall(r"```oml\n(.*?)```", doc, re.S)[0]
     wpl = re.findall(r"```wpl\n(.*?)```", doc, re.S)[0]
     line = re.findall(r"## 原始数据\n\n```\n(.*?)\n```", doc, re.S)[0]

@@ -9,6 +9,7 @@ The arc-optimization tests (test_arc_optimization_*) are Rust memory
 plumbing (Arc sharing across references) with no engine surface —
 column expressions are shared by Catalyst's subexpression handling."""
 
+from conftest import REF, needs_reference
 from wp_motor_spark.oml.compiler import compile_oml
 
 
@@ -148,6 +149,7 @@ def test_value_arr_collect_and_to_json(spark):
 # --------------------------------------- wp-knowledge memdb.rs (13 tests)
 
 
+@needs_reference
 def test_knowdb_memdb_contract(spark, tmp_path):
     """wp-knowledge/src/mem/memdb.rs: the reference's own example.csv
     loads 10 rows (test_load); a max-row cap loads EXACTLY max, no
@@ -161,7 +163,7 @@ def test_knowdb_memdb_contract(spark, tmp_path):
 
     from wp_motor_spark.knowdb import KnowDB
 
-    ref_csv = "/root/reference/crates/wp-knowledge/src/mem/dict/example.csv"
+    ref_csv = f"{REF}/crates/wp-knowledge/src/mem/dict/example.csv"
     root = tmp_path / "work"
     kdir = root / "models" / "knowledge"
     tdir = kdir / "example"

@@ -1,23 +1,30 @@
-"""End-to-end pipeline tests over the reference's instance workspace
-(tests/instance/: parse.wpl + example_adm.oml + sample.dat) and the
-sample corpus — the same fixtures the reference's integration tests use.
+"""End-to-end pipeline tests.
+
+Miss routing, the empty-model error branch and sink model selection run
+on the in-repo F1 fixture (tests/fixtures/example_simple: parse.wpl,
+sample.dat, model.oml). The tests marked needs_reference check golden
+values of the reference checkout's instance workspace (its parse.wpl +
+example_adm.oml + sample.dat, the inputs the reference's integration
+tests use) and skip when that tree is absent.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import EXAMPLE_SIMPLE, REF, example_simple, needs_reference
 from wp_motor_spark.pipeline import Pipeline, read_lines
 from wp_motor_spark.sinks import SinkSpec
 from wp_motor_spark.sinks.formats import format_lines
 
-REF = "/root/reference/tests/instance"
+INSTANCE = f"{REF}/tests/instance"
 
 
-@pytest.fixture(scope="module")
-def nginx_pipe():
+def _routed_pipe(wpl: str, oml: str) -> Pipeline:
+    """The nginx rule + model behind a kv sink, two condition-routed json
+    sinks and the miss sink, with one source tag."""
     return Pipeline(
-        wpl=open(f"{REF}/wpl/example/simple/parse.wpl").read(),
-        omls=[open(f"{REF}/oml/example_adm.oml").read()],
+        wpl=wpl,
+        omls=[oml],
         sinks=[
             SinkSpec(name="kvout", format="kv"),
             SinkSpec(name="ok200", format="json", condition="http_status == 200"),
@@ -28,8 +35,17 @@ def nginx_pipe():
     )
 
 
+@pytest.fixture(scope="module")
+def nginx_pipe():
+    return _routed_pipe(
+        open(f"{INSTANCE}/wpl/example/simple/parse.wpl").read(),
+        open(f"{INSTANCE}/oml/example_adm.oml").read(),
+    )
+
+
+@needs_reference
 def test_nginx_instance_end_to_end(spark, nginx_pipe):
-    raw = read_lines(spark, f"{REF}/wpl/example/simple/sample.dat")
+    raw = read_lines(spark, f"{INSTANCE}/wpl/example/simple/sample.dat")
     res = nginx_pipe.run_batch(raw)
     assert res.branches["/example/simple/nginx"].count() == 1
     assert res.branches["miss"].count() == 0
@@ -44,24 +60,26 @@ def test_nginx_instance_end_to_end(spark, nginx_pipe):
     assert res.sink_lines["err"].count() == 0
 
 
-def test_miss_routing(spark, nginx_pipe):
+def test_miss_routing(spark):
+    pipe = _routed_pipe(example_simple("parse.wpl"), example_simple("model.oml"))
     raw = spark.createDataFrame([("totally unparseable ???",)], ["value"])
-    res = nginx_pipe.run_batch(raw)
+    res = pipe.run_batch(raw)
     assert res.branches["miss"].count() == 1
     assert res.sink_lines["miss"].collect()[0]["line"] == "totally unparseable ???"
 
 
+@needs_reference
 def test_stream_mode(spark, tmp_path, nginx_pipe):
     """Daemon mode: same plan via foreachBatch over a file stream."""
     import shutil
 
     src = tmp_path / "in"
     src.mkdir()
-    shutil.copy(f"{REF}/wpl/example/simple/sample.dat", src / "a.dat")
+    shutil.copy(f"{INSTANCE}/wpl/example/simple/sample.dat", src / "a.dat")
     out = tmp_path / "out"
     pipe = Pipeline(
-        wpl=open(f"{REF}/wpl/example/simple/parse.wpl").read(),
-        omls=[open(f"{REF}/oml/example_adm.oml").read()],
+        wpl=open(f"{INSTANCE}/wpl/example/simple/parse.wpl").read(),
+        omls=[open(f"{INSTANCE}/oml/example_adm.oml").read()],
         sinks=[SinkSpec(name="kvout", format="kv", kind="file", path=str(out))],
     )
     stream = spark.readStream.format("text").load(str(src))
@@ -104,7 +122,7 @@ def test_error_branch_empty_oml(spark):
     channel with __err_kind (dispatcher/oml.rs:83-98)."""
     from wp_motor_spark.pipeline import Pipeline
 
-    wpl = open(f"{REF}/wpl/example/simple/parse.wpl").read()
+    wpl = example_simple("parse.wpl")
     empty_oml = """
 name : broken
 rule : /example/simple/nginx
@@ -112,7 +130,7 @@ rule : /example/simple/nginx
 _ = read(sip);
 """
     pipe = Pipeline(wpl=wpl, omls=[empty_oml], sinks=[SinkSpec(name="error", format="json")])
-    raw = read_lines(spark, f"{REF}/wpl/example/simple/sample.dat")
+    raw = read_lines(spark, f"{EXAMPLE_SIMPLE}/sample.dat")
     res = pipe.run_batch(raw)
     err = res.branches["error"]
     assert err.columns == ["__err_kind"]
@@ -146,8 +164,8 @@ def test_sink_model_selection(spark):
     """Sink groups select their OML models (sink.toml oml = [...] globs)."""
     from wp_motor_spark.pipeline import Pipeline
 
-    wpl = open(f"{REF}/wpl/example/simple/parse.wpl").read()
-    oml = open(f"{REF}/oml/example_adm.oml").read()  # name: example/simple
+    wpl = example_simple("parse.wpl")
+    oml = example_simple("model.oml")  # name: example/simple
     pipe = Pipeline(
         wpl=wpl,
         omls=[oml],
@@ -156,7 +174,7 @@ def test_sink_model_selection(spark):
             SinkSpec(name="other_models", format="json", models=["nomatch*"]),
         ],
     )
-    raw = read_lines(spark, f"{REF}/wpl/example/simple/sample.dat")
+    raw = read_lines(spark, f"{EXAMPLE_SIMPLE}/sample.dat")
     res = pipe.run_batch(raw)
     assert res.sink_lines["wants"].count() == 1
     assert "other_models" not in res.sink_lines  # selected no model

@@ -10,6 +10,7 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from conftest import example_simple
 from wp_motor_spark.queries import QUERIES
 from wp_motor_spark.session import persist_scope, scoped_persist
 
@@ -63,8 +64,8 @@ def test_wpl_parse_is_map_only(spark, sf001_dir):
 def test_pipeline_transform_map_only(spark):
     from wp_motor_spark.pipeline import Pipeline
 
-    wpl = open("/root/reference/tests/instance/wpl/example/simple/parse.wpl").read()
-    oml = open("/root/reference/tests/instance/oml/example_adm.oml").read()
+    wpl = example_simple("parse.wpl")
+    oml = example_simple("model.oml")
     pipe = Pipeline(wpl=wpl, omls=[oml])
     raw = spark.createDataFrame([("x",)], ["value"])
     out = pipe.transform(raw)["/example/simple/nginx"]

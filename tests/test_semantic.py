@@ -2,11 +2,17 @@
 extract_word.rs): built-in word sets, add/replace merge against the
 reference's OWN example configs (config-examples/), the
 SEMANTIC_DICT_CONFIG env hook, and the Spark semantic pipes consuming
-the dict."""
+the dict.
+
+The add/replace tests read the reference checkout's config-examples and
+are marked needs_reference (they skip when that tree is absent). The
+workspace switch test runs on the in-repo `wproj init --mode full`
+scaffold."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF, needs_reference
 from wp_motor_spark.oml.semantic import (
     SemanticDict,
     load_semantic_dict,
@@ -14,7 +20,7 @@ from wp_motor_spark.oml.semantic import (
     semantic_dict,
 )
 
-EXAMPLES = "/root/reference/config-examples"
+EXAMPLES = f"{REF}/config-examples"
 
 
 @pytest.fixture(autouse=True)
@@ -35,6 +41,7 @@ def test_builtin_sets():
     assert "nr" in d.core_pos  # hard-coded, non-configurable
 
 
+@needs_reference
 def test_add_mode_merges_reference_example():
     conf = load_semantic_dict(f"{EXAMPLES}/semantic_dict_example.toml")
     assert conf["mode"] == "add"
@@ -45,6 +52,7 @@ def test_add_mode_merges_reference_example():
     assert "calculate" in d.action_verbs and "connect" in d.action_verbs
 
 
+@needs_reference
 def test_replace_mode_reference_example():
     conf = load_semantic_dict(f"{EXAMPLES}/semantic_dict_replace_mode.toml")
     d = SemanticDict.builtin().merge(conf)
@@ -102,18 +110,21 @@ def test_extract_pipes_disabled_by_default(spark):
 
 def test_workspace_conf_flips_semantic_switch(tmp_path):
     """build_pipeline applies wparse.toml [semantic] enabled at startup
-    (facade/args.rs:125 -> service.rs:50); the reference instance tree
-    enables it."""
+    (facade/args.rs:125 -> service.rs:50): a workspace whose conf
+    enables it flips the switch on."""
     from wp_motor_spark.config import build_pipeline, load_workspace
     from wp_motor_spark.oml.semantic import (
         is_semantic_enabled,
         set_semantic_enabled,
     )
+    from wp_motor_spark.wproj import main as wproj
 
+    root = tmp_path / "ws"
+    assert wproj(["init", "-w", str(root), "--mode", "full"]) == 0
+    with open(root / "conf" / "wparse.toml", "a") as fh:
+        fh.write("[semantic]\nenabled = true\n")
     try:
-        ws = load_workspace(
-            "/root/reference/tests/instance", out_root=str(tmp_path)
-        )
+        ws = load_workspace(str(root), out_root=str(tmp_path / "out"))
         assert ws.semantic_enabled is True
         build_pipeline(ws)
         assert is_semantic_enabled()

@@ -5,6 +5,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from conftest import example_simple
 from wp_motor_spark.operators.stats import (
     alert,
     streaming_windowed_counts,
@@ -91,9 +92,8 @@ def test_streaming_windowed_counts(spark, tmp_path):
 def test_pipeline_monitor(spark):
     from wp_motor_spark.pipeline import Pipeline
 
-    wpl = open("/root/reference/tests/instance/wpl/example/simple/parse.wpl").read()
-    pipe = Pipeline(wpl=wpl)
-    good = open("/root/reference/tests/instance/wpl/example/simple/sample.dat").read().strip()
+    pipe = Pipeline(wpl=example_simple("parse.wpl"))
+    good = example_simple("sample.dat").strip()
     raw = spark.createDataFrame([(good,), ("garbage ???",), ("",)], ["value"])
     rows = {(r["rule"], r["disposition"]): r["total"] for r in pipe.monitor(raw).collect()}
     assert rows[("/example/simple/nginx", "success")] == 1

@@ -3,36 +3,22 @@
 Fixtures: the reference tree's tests/sample/* and tests/instance/wpl/* —
 the same inputs the reference engine's integration tests consume
 (SURVEY.md §5). Tests that read those files skip when the tree is absent;
-the nginx rule is the in-repo F1 fixture (FIXTURES.md).
+the nginx rule and line are the in-repo F1 fixture,
+tests/fixtures/example_simple/ (FIXTURES.md §F1).
 """
 
 import base64
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REF, example_simple, needs_reference
 from wp_motor_spark.wpl import MultiParser, compile_rule, parse_wpl
 
-REF = "/root/reference"
-
-needs_ref = pytest.mark.skipif(
-    not os.path.isdir(REF),
-    reason="reads the reference's sample corpus, which is not checked out",
-)
-
-# F1 (FIXTURES.md): the reference's tests/instance/wpl/example/simple rule
-NGINX_WPL = """package /example/simple {
-  rule nginx {
-    (ip:sip,2*_,time/clf:recv_time<[,]>,http/request",http/status,digit,chars",http/agent",_")
-  }
-}
-"""
-NGINX_LINE = (
-    '192.168.1.2 - - [06/Aug/2019:12:12:19 +0800] "GET /nginx-logo.png HTTP/1.1" '
-    '200 368 "http://119.122.1.4/" "Mozilla/5.0 (Macintosh)" "-"'
-)
+# F1 (FIXTURES.md): the example/simple nginx rule and its sample line
+NGINX_WPL = example_simple("parse.wpl")
+NGINX_LINE = example_simple("sample.dat").strip()
 
 
 def test_parse_wpl_ast():
@@ -63,7 +49,7 @@ def test_nginx_golden(spark):
     assert row["_rule"] == "/example/simple/nginx"
 
 
-@needs_ref
+@needs_reference
 def test_nginx_sample_dat(spark):
     cr = compile_rule(parse_wpl(NGINX_WPL)[0])
     df = spark.read.text(f"{REF}/tests/sample/nginx/sample.dat")
@@ -87,7 +73,7 @@ def test_miss_and_residue(spark):
     assert len(prow) == 1 and prow[0]["_residue"].strip() == "tail"
 
 
-@needs_ref
+@needs_reference
 def test_h3c_waf_base64_kv(spark):
     """F3: base64 preprocessor + scope fmt + bulk kv repeat."""
     wpl = open(f"{REF}/tests/sample/h3c_waf/parse.wpl").read()
@@ -105,7 +91,7 @@ def test_h3c_waf_base64_kv(spark):
     assert kv["action"] == "REJECT"
 
 
-@needs_ref
+@needs_reference
 def test_huawei_partial_corpus(spark):
     """F4: POLICYPERMIT lines match; SESSION_* lines miss (no CID= segment)."""
     wpl = open(f"{REF}/tests/sample/huawei_zhuru/parse.wpl").read()
@@ -120,7 +106,7 @@ def test_huawei_partial_corpus(spark):
     assert ok["kv_2"]["vsys"] == "CSG_Security"
 
 
-@needs_ref
+@needs_reference
 def test_benchmark_multirule_dispatch(spark):
     """F2: two comma-separated rules; first-match-wins labeling."""
     wpl = open(f"{REF}/tests/instance/wpl/benchmark/parse.wpl").read()
@@ -224,7 +210,7 @@ def test_alt_group(spark):
     assert rows["y"]["addr"] is None
 
 
-@needs_ref
+@needs_reference
 def test_h3c_waf_golden(spark):
     """Base64-wrapped kv syslog (tests/sample/h3c_waf): preproc decode +
     scope digit + double timestamps + merged kv runs."""
@@ -242,7 +228,7 @@ def test_h3c_waf_golden(spark):
     assert kv["action"] == "REJECT"
 
 
-@needs_ref
+@needs_reference
 def test_huawei_zhuru_golden(spark):
     """Huawei USG base64 syslog (tests/sample/huawei_zhuru): only the two
     POLICY lines satisfy the kv(@CID) guard; SECLOG lines miss — the same
@@ -425,7 +411,7 @@ def test_auto_subfield_in_containers(spark):
     assert (row2["t"], row2["v"]) == ("float", "443.0")
 
 
-@needs_ref
+@needs_reference
 def test_unquote_unescape_quota_golden(spark):
     """parser_functionality.rs should_parse_json_with_escaped_quotes +
     quotation.rs unit vectors: `unquote/unescape` drops every UNESCAPED
@@ -543,7 +529,7 @@ def test_adaptive_reorder_by_hit_count(spark):
     assert sum(1 for _, rule, _, _ in base if rule == "hot") == 90
 
 
-@needs_ref
+@needs_reference
 def test_reference_benchmark_rules_full_extraction(spark):
     """The reference's own 27-field benchmark rules against its own sample
     lines (tests/instance/wpl/benchmark): every typed field — times, SNs,
@@ -594,7 +580,7 @@ def test_reference_benchmark_rules_full_extraction(spark):
     assert len(r2["kv"]) == 8
 
 
-@needs_ref
+@needs_reference
 def test_actor_workflow_h3c_base64_golden(spark):
     """Reference tests/actor_workflows.rs::actor_workflows_process_http_logs
     _with_base64_decoding: the inline rule |decode/base64|(digit:id<<,>>,

@@ -1,14 +1,17 @@
 """wproj project lifecycle CLI: init scaffolds a workspace the loader and
 checker accept; check validates the REFERENCE instance and catches broken
-rules; rule list inventories compiled rules."""
+rules; rule list inventories compiled rules. The tests that drive the
+reference checkout's instance are marked needs_reference and skip when
+that tree is absent."""
 
 from __future__ import annotations
 
 import json
 
+from conftest import REF, needs_reference
 from wp_motor_spark.wproj import main
 
-INSTANCE = "/root/reference/tests/instance"
+INSTANCE = f"{REF}/tests/instance"
 
 
 def test_init_check_round_trip(tmp_path, capsys):
@@ -22,6 +25,7 @@ def test_init_check_round_trip(tmp_path, capsys):
     assert "wrote 0 files" in capsys.readouterr().out
 
 
+@needs_reference
 def test_check_validates_reference_instance(capsys):
     assert main(["check", "-w", INSTANCE]) == 0
     out = capsys.readouterr().out
@@ -44,6 +48,7 @@ def test_check_catches_broken_wpl_and_json_mode(tmp_path, capsys):
     assert main(["check", "-w", root, "--what", "conf,oml"]) == 0
 
 
+@needs_reference
 def test_rule_list_reference_instance(capsys):
     assert main(["rule", "list", "-w", INSTANCE]) == 0
     out = capsys.readouterr().out
@@ -51,6 +56,7 @@ def test_rule_list_reference_instance(capsys):
     assert "sip:ip" in out
 
 
+@needs_reference
 def test_rule_parse_offline_on_reference_sample(spark, capsys):
     rc = main([
         "rule", "parse", "-w", INSTANCE,
@@ -83,6 +89,7 @@ def test_data_stat_and_clean(tmp_path, capsys):
     assert os.path.exists(os.path.join(root, "data", "demo.dat"))  # inputs kept
 
 
+@needs_reference
 def test_data_check_and_validate_lifecycle(spark, tmp_path, capsys):
     """wproj data check (source connectivity) + data validate (delivery
     ratios vs input, 02-wproj.md): fill the configured source with wpgen,
