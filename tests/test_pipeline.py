@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import EXAMPLE_SIMPLE, REF, example_simple, needs_reference
-from wp_motor_spark.pipeline import Pipeline, read_lines
+from wp_motor_spark.pipeline import Pipeline, read_lines, stream_lines
 from wp_motor_spark.sinks import SinkSpec
 from wp_motor_spark.sinks.formats import format_lines
 
@@ -491,3 +491,118 @@ def test_sink_filter_expect_both_directions(spark):
     assert '"flag":"yes"' in res.sink_lines["on_true"].collect()[0]["line"]
     assert res.sink_lines["on_false"].count() == 1
     assert '"flag":"no"' in res.sink_lines["on_false"].collect()[0]["line"]
+
+
+# ------------------------------------------------- one job per sink write
+
+
+def _example_lines():
+    """The F1 sample line, the same request answered 404, and a line no
+    rule matches: by hand, 2 parsed, 1 with status 200, 1 miss."""
+    ok = example_simple("sample.dat").strip()
+    return [ok, ok.replace('" 200 368 ', '" 404 368 '), "totally unparseable ???"]
+
+
+def _jobs_of(spark, fn):
+    """Run fn() in its own job group; return (result, jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{id(fn)}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        got = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_batch_runs_one_job_per_sink(spark):
+    """Each sink's line count comes from its own write job: no second
+    count() re-running source scan, parse, OML and format per sink."""
+    pipe = Pipeline(
+        wpl=example_simple("parse.wpl"),
+        omls=[example_simple("model.oml")],
+        sinks=[
+            SinkSpec(name="all", kind="blackhole", format="json"),
+            SinkSpec(name="ok200", kind="blackhole", format="json",
+                     condition="http_status == 200"),
+            SinkSpec(name="miss", kind="blackhole", format="raw"),
+        ],
+    )
+    raw = spark.createDataFrame([(v,) for v in _example_lines()], ["value"])
+    counts, jobs = _jobs_of(spark, lambda: pipe.write_batch(raw))
+    assert counts == {"all": 2, "ok200": 1, "miss": 1}
+    assert jobs == len(counts)
+
+
+def test_tcp_sink_count_is_frames_received(spark, tmp_path):
+    """A foreachPartition-shaped sink reports the rows its partitions sent,
+    summed in the same job that sent them."""
+    import time
+
+    from wp_motor_spark.sources.net import TcpCollector
+
+    spool = str(tmp_path / "tcp")
+    c = TcpCollector("127.0.0.1", 0, spool).start()
+    try:
+        pipe = Pipeline(
+            wpl="rule r { (chars:msg) }",
+            omls=["name : m\nrule : r\n---\nmsg = read(msg);\n"],
+            sinks=[SinkSpec(name="out", kind="tcp", format="raw",
+                            options={"port": c.port, "framing": "octet"})],
+        )
+        raw = spark.createDataFrame(
+            [(v,) for v in ("alpha", "beta", "gamma", "delta")], ["value"]
+        )
+        assert raw.rdd.getNumPartitions() > 1  # the sum spans partitions
+        counts, jobs = _jobs_of(spark, lambda: pipe.write_batch(raw))
+        time.sleep(0.7)
+    finally:
+        c.stop()
+    frames = spark.read.text(spool).collect()
+    assert counts == {"out": len(frames)} == {"out": 4}
+    assert jobs == 1
+
+
+def test_stream_counts_per_micro_batch(spark, tmp_path):
+    """Daemon mode on the F1 fixture: two files, one per micro-batch; the
+    counts write_batch returns inside foreachBatch match each file, and
+    the file sink holds every parsed line."""
+    import os
+
+    src = tmp_path / "in"
+    src.mkdir()
+    lines = _example_lines()
+    (src / "a.dat").write_text("\n".join([lines[0], lines[2]]) + "\n")
+    (src / "b.dat").write_text("\n".join([lines[0], lines[1]]) + "\n")
+    os.utime(src / "a.dat", (1_000_000_000, 1_000_000_000))  # a.dat first
+    out = str(tmp_path / "out")
+    pipe = Pipeline(
+        wpl=example_simple("parse.wpl"),
+        omls=[example_simple("model.oml")],
+        sinks=[
+            SinkSpec(name="kvout", kind="file", path=out, format="kv"),
+            SinkSpec(name="miss", kind="file", path=str(tmp_path / "miss"),
+                     format="raw"),
+        ],
+    )
+    calls = []
+    write_batch = pipe.write_batch
+
+    def recording(df, col="value"):
+        got = write_batch(df, col)
+        calls.append(got)
+        return got
+
+    pipe.write_batch = recording
+    q = pipe.run_stream(
+        stream_lines(spark, str(src), max_files_per_trigger=1),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert calls == [{"kvout": 1, "miss": 1}, {"kvout": 2, "miss": 0}]
+    written = [r["value"] for r in spark.read.text(out).collect()]
+    assert len(written) == 3
+    assert all("src_ip=192.168.1.2" in w for w in written)

@@ -1531,15 +1531,15 @@ def test_err_report_parse_verdicts():
         "package pkg { rule x { (json(),_,_,time<[,]>) } }",
         "package pkg { rule x { (json(a),_,_,time<[,]>) } }",
         "package /test_pkg { rule test_rule { (_*) } }",
-        "package pkg{ rule x { (digit:id<<,>>,time,sn,chars\\:), pt(kv\;) , (*kv\\,) } }",
+        "package pkg{ rule x { (digit:id<<,>>,time,sn,chars\\:), pt(kv\\;) , (*kv\\,) } }",
     ]
     for src in errs:
         with _pytest.raises(WplSyntaxError):
             parse_wpl(src)
 
     oks = [
-        "package pkg{ rule x { (digit:id<<,>>,time,sn,chars\\:), opt(kv\;), (*kv\\,) } }",
-        "package pkg{ rule x { opt(ip), opt(kv\;), (*kv\\,) } }",
+        "package pkg{ rule x { (digit:id<<,>>,time,sn,chars\\:), opt(kv\\;), (*kv\\,) } }",
+        "package pkg{ rule x { opt(ip), opt(kv\\;), (*kv\\,) } }",
         "package pkg{ rule x { (json( opt(ip)@a ) ) } }",
     ]
     for src in oks:

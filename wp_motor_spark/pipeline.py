@@ -14,9 +14,9 @@ Infra side-channels (tests/instance/topology/sinks/infra.d/): miss
 (WPL-unmatched), residue (partial tails), error (empty OML output),
 default (no OML model matched). Everything is map-only + broadcast joins:
 at 100TB each branch is an independent column-pruned scan of the same
-source. Nothing is persisted: every sink's action re-reads and re-parses
-the source (the deterministic wp_event_id keeps records aligned across
-those passes).
+source. Nothing is persisted: each sink runs ONE action, its write, and
+the line count it reports is observed on that same job (the deterministic
+wp_event_id keeps records aligned across the per-sink passes).
 
 Batch and streaming share the plan: `run_stream` wraps the same batch
 assembly in foreachBatch (the reference's daemon mode).
@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from wp_motor_spark.conditions import compile_condition
 from wp_motor_spark.config import _INFRA
@@ -255,57 +255,72 @@ class Pipeline:
                 result.sink_lines[spec.name] = lines
         return result
 
-    def _write_sink(self, spec: SinkSpec, lines: DataFrame) -> None:
-        """One sink write (no rescue handling — the caller wraps)."""
-        if spec.kind == "file" and spec.path:
-            lines.write.mode("append").text(spec.path)
-        elif spec.kind == "test_rescue":
-            # failure-injection file sink (backends/test_rescue.rs): fails
-            # while its health marker is down
-            from wp_motor_spark.sinks import rescue as rsc
+    def _write_sink(self, spec: SinkSpec, lines: DataFrame) -> int:
+        """One sink write (no rescue handling — the caller wraps).
 
-            rsc.write_or_raise(lines, spec.path)
-        elif spec.kind == "kafka":
-            from wp_motor_spark.sources.kafka import sink_options
-
-            (
-                lines.selectExpr("CAST(line AS STRING) AS value")
-                .write.format("kafka")
-                .options(**sink_options(spec.options))
-                .save()
-            )
-        elif spec.kind == "tcp":
+        Returns the number of lines delivered, counted inside the write's
+        own job, so a sink costs one action: DataFrameWriter kinds observe
+        a row count, read only after the write returned; the network
+        kinds (tcp, syslog, victorialogs) sum the rows each partition
+        sent; kinds that deliver nothing (memory, file without a path) run
+        one count(). ``lines`` itself is never observed, so after a failed
+        write the caller can hand it to the rescue spool as it is."""
+        if spec.kind == "tcp":
             from wp_motor_spark.sinks.net import write_tcp
 
-            write_tcp(
+            return write_tcp(
                 lines,
                 spec.options.get("host", "127.0.0.1"),
                 int(spec.options["port"]),
                 framing=spec.options.get("framing", "newline"),
             )
-        elif spec.kind == "syslog":
+        if spec.kind == "syslog":
             from wp_motor_spark.sinks.net import write_syslog
 
-            write_syslog(
+            return write_syslog(
                 lines,
                 spec.options.get("host", "127.0.0.1"),
                 int(spec.options["port"]),
                 proto=spec.options.get("proto", "udp"),
             )
-        elif spec.kind == "victorialogs":
+        if spec.kind == "victorialogs":
             from wp_motor_spark.sinks.victorialogs import write_victorialogs
 
-            write_victorialogs(
+            return write_victorialogs(
                 lines,
                 endpoint=spec.options.get("endpoint", ""),
                 insert_path=spec.options.get("insert_path", "/insert/json"),
                 create_time_col=spec.options.get("create_time_field"),
             )
-        elif spec.kind == "blackhole":
-            lines.write.format("noop").mode("append").save()
+        if not (spec.kind in ("test_rescue", "kafka", "blackhole")
+                or (spec.kind == "file" and spec.path)):
+            return lines.count()
+        obs = Observation()
+        observed = lines.observe(obs, F.count(F.lit(1)).alias("n"))
+        if spec.kind == "file":
+            observed.write.mode("append").text(spec.path)
+        elif spec.kind == "test_rescue":
+            # failure-injection file sink (backends/test_rescue.rs): fails
+            # while its health marker is down
+            from wp_motor_spark.sinks import rescue as rsc
+
+            rsc.write_or_raise(observed, spec.path)
+        elif spec.kind == "kafka":
+            from wp_motor_spark.sources.kafka import sink_options
+
+            (
+                observed.selectExpr("CAST(line AS STRING) AS value")
+                .write.format("kafka")
+                .options(**sink_options(spec.options))
+                .save()
+            )
+        else:
+            observed.write.format("noop").mode("append").save()
+        return int(obs.get["n"])
 
     def write_batch(self, raw: DataFrame, col: str = "value") -> dict[str, int]:
-        """Run and append to each sink's destination; returns line counts.
+        """Run and append to each sink's destination; returns each sink's
+        delivered line count, taken from its write job (``_write_sink``).
 
         With ``rescue_dir`` set, a failing sink write spools its formatted
         lines as RescueEntry JSONL instead of failing the batch
@@ -317,7 +332,7 @@ class Pipeline:
             if lines is None:
                 continue
             try:
-                self._write_sink(spec, lines)
+                counts[spec.name] = self._write_sink(spec, lines)
             except Exception as exc:
                 if self.robust == "strict":
                     raise  # Terminate: no rescue masks a failing sink
@@ -337,8 +352,6 @@ class Pipeline:
                         "spool — lines dropped): %s", spec.name, exc
                     )
                 counts[spec.name] = 0
-                continue
-            counts[spec.name] = lines.count()
         return counts
 
     def replay_rescue(
@@ -359,8 +372,6 @@ class Pipeline:
         flush-interval window as the reference)."""
         import time as _time
 
-        from pyspark.sql import Observation
-
         from wp_motor_spark.sinks import rescue as rsc
 
         if self.rescue_dir is None:
@@ -374,26 +385,21 @@ class Pipeline:
             if not speed_limit:
                 lines = rsc.read_rescued(spark, self.rescue_dir, name)
                 try:
-                    self._write_sink(spec, lines)
+                    counts[name] = self._write_sink(spec, lines)
                 except Exception:
                     continue  # still unhealthy; retry on the next wprescue
-                counts[name] = lines.count()
                 rsc.drain(self.rescue_dir, name)
                 continue
             delivered = 0
             t0 = _time.monotonic()
             failed = False
             for path in rsc.spool_files(self.rescue_dir, name):
-                obs = Observation()
-                lines = rsc.decode_entries(spark.read.text(path)).observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                )
+                lines = rsc.decode_entries(spark.read.text(path))
                 try:
-                    self._write_sink(spec, lines)
+                    delivered += self._write_sink(spec, lines)
                 except Exception:
                     failed = True
                     break  # keep the spool; next run re-delivers it all
-                delivered += int(obs.get["n"])
                 # token-bucket pacing at file granularity: sleep until
                 # delivered/limit seconds have elapsed overall
                 wait = delivered / speed_limit - (_time.monotonic() - t0)

@@ -3,10 +3,12 @@
 Reference: src/sinks/backends/{tcp.rs,syslog.rs} + the RFC3164 encoder
 (src/protocol/syslog/encoder.rs:36-48).
 
-Shape: `df.foreachPartition` — each executor task opens one connection and
-streams its partition (the Spark analog of the reference's per-sink
-connection pool; N partitions = N concurrent connections). Used directly
-for batch, and from foreachBatch for streaming.
+Shape: one `mapPartitions(send).sum()` job — each executor task opens one
+connection, streams its partition and yields the number of rows it sent
+(the Spark analog of the reference's per-sink connection pool; N
+partitions = N concurrent connections). The writers return that sum, so
+the delivered count costs no second job. Used directly for batch, and from
+foreachBatch for streaming.
 """
 
 from __future__ import annotations
@@ -22,13 +24,15 @@ def write_tcp(
     port: int,
     framing: str = "newline",  # newline | octet (RFC6587 octet counting)
     col: str = "line",
-) -> None:
-    """Send one frame per row over TCP; one connection per partition."""
+) -> int:
+    """Send one frame per row over TCP; one connection per partition.
+    Returns the number of frames sent."""
 
-    def send(rows) -> None:
+    def send(rows):
         import socket
 
         sock = None
+        n = 0
         try:
             for r in rows:
                 if sock is None:  # connect lazily: skip empty partitions
@@ -38,11 +42,13 @@ def write_tcp(
                     sock.sendall(str(len(msg)).encode() + b" " + msg)
                 else:
                     sock.sendall(msg + b"\n")
+                n += 1
         finally:
             if sock is not None:
                 sock.close()
+        yield n
 
-    lines.foreachPartition(send)
+    return lines.rdd.mapPartitions(send).sum()
 
 
 def write_syslog(
@@ -51,24 +57,27 @@ def write_syslog(
     port: int,
     proto: str = "udp",
     col: str = "line",
-) -> None:
+) -> int:
     """Send rows as syslog datagrams/frames. Rows should already be
-    RFC3164-encoded (see `syslog_lines`); raw lines pass through as-is."""
+    RFC3164-encoded (see `syslog_lines`); raw lines pass through as-is.
+    Returns the number of messages sent."""
     if proto == "tcp":
-        write_tcp(lines, host, port, framing="newline", col=col)
-        return
+        return write_tcp(lines, host, port, framing="newline", col=col)
 
-    def send(rows) -> None:
+    def send(rows):
         import socket
 
         sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+        n = 0
         try:
             for r in rows:
                 sock.sendto((r[col] or "").encode("utf-8"), (host, port))
+                n += 1
         finally:
             sock.close()
+        yield n
 
-    lines.foreachPartition(send)
+    return lines.rdd.mapPartitions(send).sum()
 
 
 def syslog_lines(
