@@ -8,6 +8,8 @@ example_adm.oml + sample.dat, the inputs the reference's integration
 tests use) and skip when that tree is absent.
 """
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -506,7 +508,8 @@ def _example_lines():
 def _jobs_of(spark, fn):
     """Run fn() in its own job group; return (result, jobs it launched)."""
     sc = spark.sparkContext
-    group = f"jobs-of-{id(fn)}"
+    # uuid, not id(fn): a collected lambda's id is reused by the next one
+    group = f"jobs-of-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "count the jobs of one call")
     try:
         got = fn()
@@ -532,6 +535,13 @@ def test_write_batch_runs_one_job_per_sink(spark):
     counts, jobs = _jobs_of(spark, lambda: pipe.write_batch(raw))
     assert counts == {"all": 2, "ok200": 1, "miss": 1}
     assert jobs == len(counts)
+    # no sink and no model configured: the rule's records reach the
+    # default memory sink, which delivers nothing and is one observed
+    # write too (a count() would be two jobs under AQE)
+    pipe = Pipeline(wpl=example_simple("parse.wpl"))
+    counts, jobs = _jobs_of(spark, lambda: pipe.write_batch(raw))
+    assert counts == {"default": 2}
+    assert jobs == 1
 
 
 def test_tcp_sink_count_is_frames_received(spark, tmp_path):

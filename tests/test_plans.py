@@ -4,6 +4,7 @@ for dims, map-only parse/transform paths — and the persist scope that
 releases the InMemoryRelations query builders cache.
 """
 
+import re
 import threading
 
 import pytest
@@ -71,6 +72,10 @@ def test_pipeline_transform_map_only(spark):
     out = pipe.transform(raw)["/example/simple/nginx"]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    # one tokenize per row: the branch types its fields from the rule
+    # cascade's own parts instead of running the rule's regex again
+    (cr,) = pipe.parser.rules
+    assert len(re.findall(r"regexp_replace\([^,]*, " + re.escape(cr.pattern), plan)) == 1
 
 
 def test_minhash_and_simhash_are_jvm_only(spark, sf001_dir):

@@ -63,12 +63,20 @@ def test_miss_and_residue(spark):
     partial = NGINX_LINE + " tail"  # short tail (<20%) -> partial
     garbage = "not an access log line at all ..................."
     blank = "   "
-    df = spark.createDataFrame([(ok,), (partial,), (garbage,), (blank,)], ["value"])
+    # Unicode White_Space only (ideographic space, no-break space): blank
+    # as in the reference's str::trim, for extract and the cascade alike
+    unicode_blanks = ["\u3000", "\u00a0"]
+    df = spark.createDataFrame(
+        [(v,) for v in [ok, partial, garbage, blank, *unicode_blanks]], ["value"]
+    )
     extracted = cr.extract(df, keep=["value"]).collect()
     rows = {r["value"]: r["_disposition"] for r in extracted}
     assert rows[ok] == "success"
     assert rows[garbage] == "miss"
     assert rows[blank] == "blank"
+    labeled = {r["value"]: r["_disposition"] for r in MultiParser([cr]).label(df).collect()}
+    for v in unicode_blanks:
+        assert rows[v] == labeled[v] == "blank", hex(ord(v))
     prow = [r for r in extracted if r["_disposition"] == "partial"]
     assert len(prow) == 1 and prow[0]["_residue"].strip() == "tail"
 

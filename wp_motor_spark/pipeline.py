@@ -76,9 +76,6 @@ class PipelineResult:
     branches: dict[str, DataFrame] = field(default_factory=dict)
     sink_lines: dict[str, DataFrame] = field(default_factory=dict)
 
-    def counts(self) -> dict[str, int]:
-        return {k: v.count() for k, v in self.sink_lines.items()}
-
 
 class Pipeline:
     def __init__(
@@ -142,7 +139,6 @@ class Pipeline:
         parsed = self.parser.parse(raw, col)
         branches: dict[str, DataFrame] = {}
         residue_parts: list[DataFrame] = []
-        self._branch_model: dict[str, str] = {}  # branch -> OML model name
         for key, df in parsed.items():
             if key == "__miss__":
                 branches["miss"] = df
@@ -186,7 +182,6 @@ class Pipeline:
                 branches["error"] = out
             else:
                 branches[key] = out
-                self._branch_model[key] = model.model.name
         if residue_parts:
             res = residue_parts[0]
             for r in residue_parts[1:]:
@@ -216,7 +211,9 @@ class Pipeline:
         (miss/residue/error) go to same-named sinks when declared."""
         result = PipelineResult(branches=self.transform(raw, col))
         # a sink named "intercept" is an ordinary business sink (see
-        # config._INFRA) and joins the condition fan-out like any other name
+        # config._INFRA) and joins the condition fan-out like any other
+        # name; "default" is infra, so each data branch is a rule key
+        # with an OML model
         data_branches = {k: v for k, v in result.branches.items() if k not in _INFRA}
         for spec in self.sinks:
             if spec.name in _INFRA:
@@ -230,8 +227,7 @@ class Pipeline:
             for key, df in data_branches.items():
                 # sink groups select which OML models feed them
                 # (sink.toml `oml = [...]`, dispatcher/oml.rs:59-70)
-                model_name = self._branch_model.get(key, "")
-                if not _model_selected(spec.models, model_name):
+                if not _model_selected(spec.models, self._model_for(key).model.name):
                     continue
                 # rule-key selection (route file `rule = [...]`; branches
                 # are keyed by WPL rule, so the glob applies directly)
@@ -259,12 +255,13 @@ class Pipeline:
         """One sink write (no rescue handling — the caller wraps).
 
         Returns the number of lines delivered, counted inside the write's
-        own job, so a sink costs one action: DataFrameWriter kinds observe
-        a row count, read only after the write returned; the network
-        kinds (tcp, syslog, victorialogs) sum the rows each partition
-        sent; kinds that deliver nothing (memory, file without a path) run
-        one count(). ``lines`` itself is never observed, so after a failed
-        write the caller can hand it to the rescue spool as it is."""
+        own job, so a sink costs one action: every non-network kind is one
+        observed write (a row count read only after the write returned),
+        and kinds that deliver nothing (memory, file without a path) write
+        to ``noop`` like blackhole; the network kinds (tcp, syslog,
+        victorialogs) sum the rows each partition sent. ``lines`` itself
+        is never observed, so after a failed write the caller can hand it
+        to the rescue spool as it is."""
         if spec.kind == "tcp":
             from wp_motor_spark.sinks.net import write_tcp
 
@@ -292,12 +289,9 @@ class Pipeline:
                 insert_path=spec.options.get("insert_path", "/insert/json"),
                 create_time_col=spec.options.get("create_time_field"),
             )
-        if not (spec.kind in ("test_rescue", "kafka", "blackhole")
-                or (spec.kind == "file" and spec.path)):
-            return lines.count()
         obs = Observation()
         observed = lines.observe(obs, F.count(F.lit(1)).alias("n"))
-        if spec.kind == "file":
+        if spec.kind == "file" and spec.path:
             observed.write.mode("append").text(spec.path)
         elif spec.kind == "test_rescue":
             # failure-injection file sink (backends/test_rescue.rs): fails
@@ -314,7 +308,7 @@ class Pipeline:
                 .options(**sink_options(spec.options))
                 .save()
             )
-        else:
+        else:  # blackhole, and the kinds that deliver nothing
             observed.write.format("noop").mode("append").save()
         return int(obs.get["n"])
 

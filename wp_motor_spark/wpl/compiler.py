@@ -52,6 +52,15 @@ def _no_pushdown(c: Column) -> Column:
     re-ran the shingle tokenizer per row (4x on ngram_jaccard_dups)."""
     return F.shuffle(F.array(c)).getItem(0)
 
+def _blank_col(value: Column) -> Column:
+    """The blank-line test. Rust str::trim strips UNICODE White_Space
+    (processor.rs batch_parse_package_skips_whitespace_miss pins
+    "   \\n\\t"; U+00A0/U+2028/U+3000-only lines are 'blank' in the
+    reference too), so this is a Unicode-aware regex ((?U) turns on
+    Java's UNICODE_CHARACTER_CLASS for \\s), not an ASCII btrim set."""
+    return F.coalesce(value, F.lit("")).rlike(r"^(?U)\s*$")
+
+
 # Residue acceptance threshold: unparsed tail <= 20% of line is "partial"
 # (reference: src/core/parser/wpl_engine/parser.rs:55-79).
 RESIDUE_FRAC = 0.2
@@ -716,20 +725,41 @@ def _emit_single(
         subfields=fld.subfields,
     )
     if fld.subgroup is not None:
-        sub = _Ctx()
-        _mark_tail_field([fld.subgroup])
-        _emit_group(sub, fld.subgroup, None, None)
-        sub.group_idx += 1
         # decode only for the decode-then-subparse types; a plain
         # `chars:x" | (time,ip)` re-parses the captured text DIRECTLY
         # (assemble_pipe PipeEnum::Group — no transport decode)
         out.decode = (
             "hex" if dtype == "hex" else "base64" if dtype == "base64" else None
         )
-        out.sub_pattern = "^" + "".join(sub.parts) + r"(.*)$"
-        out.sub_ngroups = sub.group_idx
-        out.sub_outputs = sub.outputs
+        out.sub_pattern, out.sub_ngroups, out.sub_outputs = _compile_subgroup(
+            fld.subgroup
+        )
     ctx.outputs.append(out)
+
+
+def _compile_subgroup(group: WplGroup) -> tuple[str, int, list[FieldOutput]]:
+    """(anchored pattern, group count, outputs) of a nested group that
+    re-parses one extracted value; the last group is the residue tail."""
+    sub = _Ctx()
+    _mark_tail_field([group])
+    _emit_group(sub, group, None, None)
+    sub.group_idx += 1
+    return "^" + "".join(sub.parts) + r"(.*)$", sub.group_idx, sub.outputs
+
+
+def _subparse_columns(
+    value: Column, pattern: str, n_groups: int, outputs: list[FieldOutput]
+) -> list[tuple[str, Column]]:
+    """(name, typed Column) for each output of a nested group re-parsing
+    ``value`` (PipeEnum::Group); all NULL where the pattern misses."""
+    repl = DELIM.join(f"${i}" for i in range(1, n_groups + 1))
+    parts = F.split(F.regexp_replace(value, pattern, repl), DELIM, -1)
+    ok = F.size(parts) == F.lit(n_groups)
+    return [
+        (so.name, _typed_column(so, F.when(ok, F.try_element_at(parts, F.lit(so.group)))))
+        for so in outputs
+        if so.dtype != "_"
+    ]
 
 
 def _emit_unbounded(
@@ -1464,10 +1494,7 @@ class CompiledRule:
         residue = self.residue_col(parts)
         frac_ok = F.length(residue) <= F.length(pre) * F.lit(RESIDUE_FRAC)
         return (
-            F.when(
-                F.btrim(F.coalesce(value, F.lit("")), F.lit(" \t\r\n\x0b\x0c")) == "",
-                F.lit("blank"),
-            )
+            F.when(_blank_col(value), F.lit("blank"))
             .when(~self.matched_col(parts, value), F.lit("miss"))
             # whitespace-only residue counts as full consumption: the
             # reference runs multispace0 after every field, so a trailing
@@ -1573,25 +1600,9 @@ class CompiledRule:
                         # (wpl_group.rs test_parse_group_pipe3,
                         # PipeEnum::Group) — same regex-subparse shape as
                         # the field-level pipe group
-                        sctx = _Ctx()
-                        _mark_tail_field([sf.subgroup])
-                        _emit_group(sctx, sf.subgroup, None, None)
-                        sctx.group_idx += 1
-                        pat = "^" + "".join(sctx.parts) + r"(.*)$"
-                        repl = DELIM.join(
-                            f"${i}" for i in range(1, sctx.group_idx + 1)
+                        cols.extend(
+                            _subparse_columns(sub, *_compile_subgroup(sf.subgroup))
                         )
-                        sub_parts = F.split(
-                            F.regexp_replace(sub, pat, repl), DELIM, -1
-                        )
-                        ok = F.size(sub_parts) == F.lit(sctx.group_idx)
-                        for so in sctx.outputs:
-                            if so.dtype == "_":
-                                continue
-                            sraw = F.when(
-                                ok, F.try_element_at(sub_parts, F.lit(so.group))
-                            )
-                            cols.append((so.name, _typed_column(so, sraw)))
                         continue
                     sub = _apply_subfield_pipes(sub, sf)
                     cols.append((nm, _cast_subfield(sub, sf.dtype)))
@@ -1624,16 +1635,11 @@ class CompiledRule:
                     decoded = F.unbase64(raw).cast("string")
                 else:
                     decoded = raw
-                repl = DELIM.join(f"${i}" for i in range(1, out.sub_ngroups + 1))
-                sub_parts = F.split(
-                    F.regexp_replace(decoded, out.sub_pattern, repl), DELIM, -1
+                cols.extend(
+                    _subparse_columns(
+                        decoded, out.sub_pattern, out.sub_ngroups, out.sub_outputs
+                    )
                 )
-                ok = F.size(sub_parts) == F.lit(out.sub_ngroups)
-                for so in out.sub_outputs:
-                    if so.dtype == "_":
-                        continue
-                    sraw = F.when(ok, F.try_element_at(sub_parts, F.lit(so.group)))
-                    cols.append((so.name, _typed_column(so, sraw)))
                 continue
             typed = _typed_column(out, raw)
             cols.append((out.name, typed))
@@ -1682,25 +1688,9 @@ class CompiledRule:
                 if sf.subgroup is not None:
                     # kv(chars@k | (time,ip)\!) — the kv VALUE is re-parsed
                     # by the nested group (wpl_group.rs pipe4_1/4_2)
-                    sctx = _Ctx()
-                    _mark_tail_field([sf.subgroup])
-                    _emit_group(sctx, sf.subgroup, None, None)
-                    sctx.group_idx += 1
-                    pat = "^" + "".join(sctx.parts) + r"(.*)$"
-                    repl = DELIM.join(
-                        f"${i}" for i in range(1, sctx.group_idx + 1)
+                    cols.extend(
+                        _subparse_columns(val, *_compile_subgroup(sf.subgroup))
                     )
-                    sub_parts = F.split(
-                        F.regexp_replace(val, pat, repl), DELIM, -1
-                    )
-                    ok = F.size(sub_parts) == F.lit(sctx.group_idx)
-                    for so in sctx.outputs:
-                        if so.dtype == "_":
-                            continue
-                        sraw = F.when(
-                            ok, F.try_element_at(sub_parts, F.lit(so.group))
-                        )
-                        cols.append((so.name, _typed_column(so, sraw)))
                     continue
                 cols.append(
                     (sf.name or sf.ref.replace("/", "_"),
@@ -1711,111 +1701,95 @@ class CompiledRule:
             cols.append((k, F.lit(v)))
         return cols
 
-    def guard_col(self, cols: dict[str, Column]) -> Column | None:
-        """WPL pipe functions are rule-match guards (pipe_fun.rs:17-451),
-        plus intrinsic validity guards: id_card fields must pass the
-        GB 11643 checksum or the rule misses (physical/id_card.rs:29-37,
-        Identity::is_valid backtracks on failure)."""
+    def guard_col(self, parts: Column) -> Column | None:
+        """The rule's match guards as one predicate over the raw parts:
+        FALSE exactly where a matched row is a miss after all, and a NULL
+        guard demotes nothing. None when the rule has no guards.
+
+        - json / exact_json: the captured token must BE valid JSON — the
+          reference's serde deserializer fails the field outright on e.g.
+          '{"a":1,"b":2,"c":  "a" : 1 } }' (json.rs test_json_std third
+          case), where a lenient JsonPath getter would not; exact_json
+          adds strict-schema coverage, and symbol subfields are equality
+          guards on the extracted value (eval/mod_test.rs
+          test_json_symbol_miss: json(symbol(boy2)@key) misses when
+          $.key != 'boy2').
+        - WPL pipe functions (pipe_fun.rs:17-451) and id_card fields,
+          which must pass the GB 11643 checksum (physical/id_card.rs:29-37,
+          Identity::is_valid backtracks on failure), over the typed field
+          columns. Those cost many JVM round trips to build, and label()
+          re-plans on every call (each streaming micro-batch), so only
+          rules with pipe or id_card guards build them."""
         from wp_motor_spark.wpl.functions import compile_guards
 
-        guard = compile_guards(self.outputs, cols)
+        guards: list[Column] = []
         for out in self.outputs:
-            if out.dtype == "id_card" and out.name in cols:
-                g = _id_card_valid(cols[out.name])
-                guard = g if guard is None else guard & g
-        return guard
-
-    def strict_guard_col(self, parts: Column) -> Column | None:
-        """Intrinsic guards that need the RAW captured token (the typed
-        outputs for these fields are projections, not the token itself):
-        exact_json strict-schema coverage."""
-        guard: Column | None = None
-        for out in self.outputs:
-            if out.dtype in ("json", "exact_json"):
-                # the captured token must BE valid JSON — the reference's
-                # serde deserializer fails the field outright on e.g.
-                # '{"a":1,"b":2,"c":  "a" : 1 } }' (json.rs test_json_std
-                # third case), where a lenient JsonPath getter would not
-                raw = F.try_element_at(parts, F.lit(out.group))
-                g = F.coalesce(
-                    _json_valid_udf()(F.nullif(raw, F.lit(""))), F.lit(False)
-                )
-                guard = g if guard is None else guard & g
+            if out.dtype not in ("json", "exact_json"):
+                continue
+            raw = F.try_element_at(parts, F.lit(out.group))
+            guards.append(
+                F.coalesce(_json_valid_udf()(F.nullif(raw, F.lit(""))), F.lit(False))
+            )
             if out.dtype == "exact_json" and out.subfields:
-                raw = F.try_element_at(parts, F.lit(out.group))
-                g = _exact_json_guard(raw, out.subfields)
-                guard = g if guard is None else guard & g
-            if out.dtype in ("json", "exact_json"):
-                # symbol subfields are equality guards on the extracted
-                # value (eval/mod_test.rs test_json_symbol_miss:
-                # json(symbol(boy2)@key) misses when $.key != 'boy2')
-                for sf in out.subfields:
-                    if sf.dtype in ("symbol", "peek_symbol") and sf.symbol is not None:
-                        raw = F.try_element_at(parts, F.lit(out.group))
-                        jp = "$." + (sf.ref or "*").replace("/", ".")
-                        g = F.get_json_object(raw, jp) == F.lit(sf.symbol)
-                        guard = g if guard is None else guard & g
-        return guard
+                guards.append(_exact_json_guard(raw, out.subfields))
+            for sf in out.subfields:
+                if sf.dtype in ("symbol", "peek_symbol") and sf.symbol is not None:
+                    jp = "$." + (sf.ref or "*").replace("/", ".")
+                    guards.append(F.get_json_object(raw, jp) == F.lit(sf.symbol))
+        if any(o.pipes or o.dtype == "id_card" for o in self.outputs):
+            cols = dict(self.field_columns(parts))
+            piped = compile_guards(self.outputs, cols)
+            if piped is not None:
+                guards.append(piped)
+            guards.extend(
+                _id_card_valid(cols[o.name])
+                for o in self.outputs
+                if o.dtype == "id_card" and o.name in cols
+            )
+        if not guards:
+            return None
+        ok = guards[0]
+        for g in guards[1:]:
+            ok = ok & g
+        return F.coalesce(ok, F.lit(True))
 
-    def match_guard_col(self, parts: Column) -> Column | None:
-        """Every guard of ``strict_guard_col`` and ``guard_col`` as one
-        predicate over the raw parts, for the first-match cascade: FALSE
-        exactly where ``extract`` demotes a matched row to miss (a NULL
-        guard demotes nothing there, so it passes here). None when the
-        rule has no guards. The typed field columns cost many JVM round
-        trips to build, and label() re-plans on every call (each
-        streaming micro-batch), so only rules with pipe or id_card guards
-        build them."""
-        piped = any(o.pipes or o.dtype == "id_card" for o in self.outputs)
-        ok: Column | None = None
-        for g in (
-            self.strict_guard_col(parts),
-            self.guard_col(dict(self.field_columns(parts))) if piped else None,
-        ):
-            if g is not None:
-                ok = g if ok is None else ok & g
-        return None if ok is None else F.coalesce(ok, F.lit(True))
+    def project(
+        self,
+        df: DataFrame,
+        value: Column,
+        parts: Column,
+        keep: list[str],
+        guard: Column | None = None,
+    ) -> DataFrame:
+        """The typed projection over ``parts``: ``keep`` columns, the raw
+        copy, typed fields, _rule/_disposition/_residue, then the pipe
+        transforms. ``guard`` FALSE demotes a success/partial row to miss."""
+        from wp_motor_spark.wpl.functions import compile_transforms
+
+        named = self.field_columns(parts)
+        keep_cols = [F.col(c) for c in keep]
+        if self.rule.copy_raw:
+            keep_cols.append(value.alias(self.rule.copy_raw))
+        disp = self.disposition_col(value, parts)
+        if guard is not None:
+            disp = F.when(disp.isin("success", "partial") & ~guard, "miss").otherwise(disp)
+        out = df.select(
+            *keep_cols,
+            *[c.alias(n) for n, c in named],
+            F.lit(self.key).alias("_rule"),
+            disp.alias("_disposition"),
+            self.residue_col(parts).alias("_residue"),
+        )
+        repl = compile_transforms(self.outputs, {n: F.col(n) for n, _ in named})
+        return out.withColumns(repl) if repl else out
 
     # -- user-facing --------------------------------------------------------
 
     def extract(self, df: DataFrame, col: str = "value", keep: list[str] | None = None) -> DataFrame:
         """Parse ``col``; returns typed columns + _rule/_disposition/_residue."""
-        value = F.col(col)
-        parts = _no_pushdown(self.parts_col(value))
-        tmp = df.withColumn("__parts", parts)
-        pcol = F.col("__parts")
-        named = self.field_columns(pcol)
-        keep_cols = [F.col(c) for c in (keep or [])]
-        if self.rule.copy_raw:
-            keep_cols.append(value.alias(self.rule.copy_raw))
-        disp = self.disposition_col(value, pcol)
-        strict = self.strict_guard_col(pcol)
-        if strict is not None:
-            # raw-token guards (exact_json schema) demote matched rows to
-            # miss while __parts is still in scope
-            disp = F.when(disp.isin("success", "partial") & ~strict, "miss").otherwise(
-                disp
-            )
-        out = tmp.select(
-            *keep_cols,
-            *[c.alias(n) for n, c in named],
-            F.lit(self.key).alias("_rule"),
-            disp.alias("_disposition"),
-            self.residue_col(pcol).alias("_residue"),
-        )
-        guard = self.guard_col({n: F.col(n) for n, _ in named})
-        if guard is not None:
-            out = out.withColumn(
-                "_disposition",
-                F.when(F.col("_disposition").isin("success", "partial") & ~guard, "miss")
-                .otherwise(F.col("_disposition")),
-            )
-        from wp_motor_spark.wpl.functions import compile_transforms
-
-        repl = compile_transforms(self.outputs, {n: F.col(n) for n, _ in named})
-        if repl:
-            out = out.withColumns(repl)
-        return out
+        tmp = df.withColumn("__parts", _no_pushdown(self.parts_col(F.col(col))))
+        parts = F.col("__parts")
+        return self.project(tmp, F.col(col), parts, keep or [], self.guard_col(parts))
 
 
 def _prefix_rules(rule: WplRule, max_depth: int) -> list["CompiledRule"]:
@@ -1866,14 +1840,20 @@ def _prefix_rules(rule: WplRule, max_depth: int) -> list["CompiledRule"]:
     return out
 
 
+_LABELS = ("_rule", "_disposition", "_residue")
+
+
 class MultiParser:
     """First-match-wins rule cascade (parser.rs:26-114).
 
     ``label`` stamps _rule/_disposition/_residue; ``parse`` returns one
-    typed DataFrame per rule plus the miss branch. Each rule's tokenizing
-    regex is MATERIALIZED once per row as a ``__parts_i`` column before the
-    first-match CASE chains run: codegen subexpression elimination does NOT
-    dedupe an expression repeated across the three when-chains (measured
+    typed DataFrame per rule plus the miss branch. Both build on one
+    cascade, and each rule's tokenizing regex runs once per row in it:
+    it is MATERIALIZED as a ``__parts_i`` column before the first-match
+    CASE chains run, and ``parse``'s branches type their fields from
+    those same parts rather than tokenizing again. Codegen subexpression
+    elimination does NOT dedupe an expression repeated across the three
+    when-chains (measured
     4.7x slower for a 3-rule cascade when parts is inlined — every chain
     re-ran every rule's regex). The trade-off vs the reference's
     short-circuiting scanner: all R regexes run for every row, but each
@@ -1891,10 +1871,11 @@ class MultiParser:
     changes first-match winners for overlapping rules exactly as the
     reference's resort does.
 
-    A rule's match guards (pipe functions, id_card checksums, json
-    validity — the checks ``extract`` demotes rows on) are part of its
-    cascade hit, so a row that fails them falls through to the next rule
-    and finally to miss, as in the reference's first-match loop.
+    A rule's match guards (``CompiledRule.guard_col``: pipe functions,
+    id_card checksums, json validity — the predicate ``extract`` demotes
+    rows on) are part of its cascade hit, so a row that fails them falls
+    through to the next rule and finally to miss, as in the reference's
+    first-match loop.
     """
 
     def __init__(self, rules: list[CompiledRule | WplRule] | str):
@@ -1942,10 +1923,11 @@ class MultiParser:
         mp.rules = [self.rules[i] for i in order]
         return mp
 
-    def label(self, df: DataFrame, col: str = "value") -> DataFrame:
+    def _cascade(self, df: DataFrame, col: str) -> DataFrame:
+        """``df`` plus every rule's ``__parts_i`` (one regex evaluation per
+        rule per row, materialized behind the _no_pushdown barrier like
+        extract's __parts) and the first-match _rule/_disposition/_residue."""
         value = F.col(col)
-        # stage 1: one regex evaluation per rule per row, materialized
-        # (behind the _no_pushdown barrier, like extract's __parts)
         tmp = df.select(
             "*",
             *[
@@ -1960,7 +1942,7 @@ class MultiParser:
             parts = F.col(f"__parts_{i}")
             disp = cr.disposition_col(value, parts)
             hit = disp.isin("success", "partial")
-            guard = cr.match_guard_col(parts)
+            guard = cr.guard_col(parts)
             if guard is not None:
                 hit = hit & guard
             rule_c = (
@@ -1972,21 +1954,17 @@ class MultiParser:
                 if res_c is None
                 else res_c.when(hit, cr.residue_col(parts))
             )
-        # Rust str::trim strips UNICODE White_Space (processor.rs
-        # batch_parse_package_skips_whitespace_miss pins "   \n\t";
-        # U+00A0/U+2028/U+3000-only lines are 'blank' in the reference
-        # too) — so the blank test is a Unicode-aware regex ((?U) turns
-        # on Java's UNICODE_CHARACTER_CLASS for \s), not an ASCII
-        # btrim set
-        blank = F.coalesce(value, F.lit("")).rlike(r"^(?U)\s*$")
         return tmp.select(
-            *df.columns,
-            F.coalesce(rule_c, F.lit(None)).alias("_rule"),
-            F.when(blank, "blank").otherwise(F.coalesce(disp_c, F.lit("miss"))).alias(
-                "_disposition"
-            ),
+            "*",
+            rule_c.alias("_rule"),
+            F.when(_blank_col(value), "blank")
+            .otherwise(F.coalesce(disp_c, F.lit("miss")))
+            .alias("_disposition"),
             res_c.alias("_residue"),
         )
+
+    def label(self, df: DataFrame, col: str = "value") -> DataFrame:
+        return self._cascade(df, col).select(*df.columns, *_LABELS)
 
     def diagnose(self, df: DataFrame, col: str = "value", max_depth: int = 8) -> DataFrame:
         """Deepest-failure diagnostics for missed rows (parser.rs:82-113):
@@ -2035,21 +2013,26 @@ class MultiParser:
     def parse(self, df: DataFrame, col: str = "value") -> dict[str, DataFrame]:
         """Split into per-rule typed DataFrames + '__miss__' branch.
 
-        Reuses one labeled scan; per-rule extraction filters to that rule's
-        rows first so each regex re-runs only on its own subset.
+        One tokenize per rule per row: rule i's branch is the cascade's
+        rows with _rule == key, typed by one projection over the cascade's
+        own ``__parts_i``. Its _disposition/_residue come from rule i's
+        disposition_col/residue_col over those parts, not from the R-way
+        cascade chains, and no guard runs again: the cascade hit holds
+        the guards already.
         """
-        labeled = self.label(df, col)
+        cascade = self._cascade(df, col)
         out: dict[str, DataFrame] = {}
         extra = [c for c in df.columns if c != col]
-        for cr in self.rules:
-            sub = labeled.where(F.col("_rule") == cr.key).drop(
-                "_rule", "_disposition", "_residue"
-            )
+        for i, cr in enumerate(self.rules):
             parsed_names = {o.name for o in cr.outputs}
-            keep = [c for c in extra if c not in parsed_names]
-            out[cr.key] = cr.extract(sub, col, keep=keep)
-        out["__miss__"] = labeled.where(
-            F.col("_disposition") == "miss"
+            out[cr.key] = cr.project(
+                cascade.where(F.col("_rule") == cr.key),
+                F.col(col),
+                F.col(f"__parts_{i}"),
+                [c for c in extra if c not in parsed_names],
+            )
+        out["__miss__"] = cascade.where(F.col("_disposition") == "miss").select(
+            *df.columns, *_LABELS
         )
         return out
 
