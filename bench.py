@@ -39,19 +39,6 @@ def main() -> None:
 
     _warm_python_workers(spark)
 
-    # Throughput probe comparable to BASELINE.md's per-record numbers:
-    # generate nginx-style lines, run the full WPL parse + OML transform,
-    # report events/s (BASELINE: WPL ~300-500 MB/s, OML ~2.7M rec/s/core).
-    # The probe runs BEFORE the query suite: the r9 driver artifact read
-    # 2.6x low because the probe inherited the 100-second suite's heap/
-    # allocator debt and box contention, and its pre-recorded loadavg
-    # couldn't show that — probe-first makes the headline number
-    # interpretable from the artifact alone.
-    try:
-        throughput = _throughput_probe(spark)
-    except Exception as exc:
-        throughput = {"err": f"{type(exc).__name__}: {exc}"[:500]}
-
     # Warm the JVM/codegen path so query 1 doesn't absorb session startup.
     with persist_scope():
         next(iter(QUERIES.values()))[0](spark, sf_dir).limit(1).count()
@@ -85,8 +72,7 @@ def main() -> None:
                     # force FULL execution of every output column: a bare
                     # count() lets Catalyst prune computed projections
                     # entirely (the projection-only queries would time a
-                    # parquet row-count scan, not the operator) — same
-                    # anti-pruning action as the throughput probe below
+                    # parquet row-count scan, not the operator)
                     df.select(
                         F.max(
                             F.xxhash64(
@@ -124,7 +110,6 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        "throughput": throughput,
         "cc_telemetry": list(CC_TELEMETRY),
         # shared-box context: same-code timings swing up to ~1.6x with
         # other tenants' load (PROFILE.md measurement discipline section)
@@ -172,83 +157,6 @@ def _warm_python_workers(spark) -> None:
     rng.groupBy((col("id") % cores).alias("g")).applyInPandas(
         lambda p: p, schema="id long"
     ).count()
-
-
-def _throughput_probe(spark, n: int = 8_000_000) -> dict:
-    # 8M rows (not 2M): at 2M the fixed per-job cost (~0.25 s of task
-    # scheduling + AQE stage setup) is ~30% of wall and understates
-    # steady-state throughput by that much; 8M amortizes it to <7%.
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-
-    from wp_motor_spark.oml.compiler import compile_oml
-    from wp_motor_spark.queries import _CLF_OML, _CLF_RULE
-    from wp_motor_spark.wpl import compile_rule, parse_wpl
-    from wp_motor_spark.wpl.generator import generate_lines
-
-    rule = parse_wpl(_CLF_RULE)[0]
-    lines = generate_lines(spark, rule, n).persist()
-    lines.count()  # materialize inputs so the probe times parse, not gen
-
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    cr = compile_rule(rule)
-    om = compile_oml(_CLF_OML)
-
-    parsed = cr.extract(lines)
-    out = om.apply(parsed.drop("value", "_rule", "_disposition", "_residue"))
-    # untimed correctness checksum — the timed pass measures the workload
-    n_ok = parsed.where(F.col("_disposition") == "success").count()
-    # max(hash of every output column) defeats column pruning: a bare
-    # count() lets Catalyst drop the whole OML projection, timing only the
-    # scan. This forces parse + transform of every row in ONE job.
-    forced = F.max(F.xxhash64(*[F.col(c).cast("string") for c in out.columns]))
-
-    def full_pass() -> float:
-        t0 = time.perf_counter()
-        out.select(forced).collect()
-        return time.perf_counter() - t0
-
-    # Warm codegen/JIT to steady state BEFORE measuring: one warm pass is
-    # not enough — across three r13 artifact runs the first measured pass
-    # was systematically 1.16-1.27x the second (same direction every time:
-    # JIT still compiling, not random contention), which poisoned the
-    # committed spread even on a quiet box. Warm until two consecutive
-    # warm walls agree within 10% (cap 4), THEN take the measured passes.
-    warm_walls = [full_pass()]
-    for _ in range(3):
-        warm_walls.append(full_pass())
-        if warm_walls[-2] / warm_walls[-1] < 1.1 and warm_walls[-1] / warm_walls[-2] < 1.1:
-            break
-    # best of 2 measured passes (a third when the spread exceeds 1.5x —
-    # that spread marks a contention spike, and one more sample usually
-    # brackets the true floor): the box is shared, min filters out noise
-    walls: list[float] = []
-    loads: list[float] = [round(os.getloadavg()[0], 2)]
-    for _ in range(2):
-        walls.append(full_pass())
-        loads.append(round(os.getloadavg()[0], 2))
-    if max(walls) / min(walls) > 1.5:
-        walls.append(full_pass())
-        loads.append(round(os.getloadavg()[0], 2))
-    wall = min(walls)
-    lines.unpersist()
-
-    return {
-        "rows": n,
-        "parse_ok": n_ok,
-        "wpl_oml_events_per_s": round(n / wall),
-        "events_per_s_per_core": round(n / wall / cores),
-        # contention context for the probe itself: loadavg before the timed
-        # passes AND after each one, plus every raw wall — a low events/s
-        # with a rising loadavg or a wide pass spread is box noise, not a
-        # code regression, and the artifact alone now shows which
-        "loadavg_1m": loads[0],
-        "loadavg_per_pass": loads,
-        "pass_walls_s": [round(w, 3) for w in walls],
-        "warm_walls_s": [round(w, 3) for w in warm_walls],
-    }
 
 
 if __name__ == "__main__":

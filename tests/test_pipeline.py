@@ -117,6 +117,9 @@ def test_condition_missing_field(spark):
     assert df.where(cond).count() == 1
     cond2 = compile_condition("nope == 5", df.columns)
     assert df.where(cond2).count() == 0
+    # a missing field's comparison is false, so its negation holds
+    cond3 = compile_condition("!(nope == 5) && !(a != 1)", df.columns)
+    assert df.where(cond3).count() == 1
 
 
 def test_error_branch_empty_oml(spark):
@@ -613,6 +616,123 @@ def test_stream_counts_per_micro_batch(spark, tmp_path):
     finally:
         q.stop()
     assert calls == [{"kvout": 1, "miss": 1}, {"kvout": 2, "miss": 0}]
+    # the source is read once per micro-batch, not once per sink write:
+    # both sinks read the one shared rule cascade
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 4
     written = [r["value"] for r in spark.read.text(out).collect()]
     assert len(written) == 3
     assert all("src_ip=192.168.1.2" in w for w in written)
+
+
+# ------------------------------------------- shared reads across sink writes
+
+
+def _f1_sinks(root) -> list[SinkSpec]:
+    """Three file sinks over the F1 fixture: every record, the 200s, and
+    the miss channel."""
+    return [
+        SinkSpec(name="all", kind="file", path=f"{root}/all", format="json"),
+        SinkSpec(name="ok200", kind="file", path=f"{root}/ok200", format="json",
+                 condition="http_status == 200"),
+        SinkSpec(name="miss", kind="file", path=f"{root}/miss", format="raw"),
+    ]
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _watch_cache(spark, pipe) -> list[bool]:
+    """Record, at each of pipe's sink writes, whether the CacheManager is
+    empty. Starts from an empty one: a persist made outside any
+    persist_scope (another test's) stays cached for the session."""
+    spark.catalog.clearCache()
+    seen = []
+    write = pipe._write_sink
+
+    def watched(spec, lines):
+        seen.append(_cache_empty(spark))
+        return write(spec, lines)
+
+    pipe._write_sink = watched
+    return seen
+
+
+def test_shared_writes_equal_unshared_writes(spark, tmp_path):
+    """Three sinks over one batch share the cascade and the rule's
+    branch; each sink's lines, wp_event_id included, equal those a
+    one-sink pipeline (which never shares) writes, in as many jobs."""
+    wpl, oml = example_simple("parse.wpl"), example_simple("model.oml")
+    raw = spark.createDataFrame([(v,) for v in _example_lines()], ["value"])
+    shared = Pipeline(wpl=wpl, omls=[oml], sinks=_f1_sinks(tmp_path / "shared"))
+    seen = _watch_cache(spark, shared)
+    counts, jobs = _jobs_of(spark, lambda: shared.write_batch(raw))
+    assert counts == {"all": 2, "ok200": 1, "miss": 1}
+    assert jobs == len(counts)
+    assert seen == [False, False, False]  # the writes read shared frames
+    for spec in _f1_sinks(tmp_path / "alone"):
+        one = Pipeline(wpl=wpl, omls=[oml], sinks=[spec])
+        assert one.write_batch(raw) == {spec.name: counts[spec.name]}
+        got = sorted(r["value"] for r in spark.read.text(spec.path).collect())
+        want = sorted(
+            r["value"]
+            for r in spark.read.text(str(tmp_path / "shared" / spec.name)).collect()
+        )
+        assert got == want and len(got) == counts[spec.name]
+        if spec.format == "json":
+            assert all('"wp_event_id":' in line for line in got)
+
+
+def test_write_batch_leaks_no_cache(spark, tmp_path):
+    """The frames write_batch shares are released when it returns, also
+    after a failing sink is rescued and when a strict failure raises; a
+    one-sink write_batch and a bare run_batch persist nothing."""
+    from wp_motor_spark.sinks import rescue as rsc
+
+    wpl, oml = example_simple("parse.wpl"), example_simple("model.oml")
+    raw = spark.createDataFrame([(v,) for v in _example_lines()], ["value"])
+
+    pipe = Pipeline(wpl=wpl, omls=[oml], sinks=_f1_sinks(tmp_path / "ok"))
+    seen = _watch_cache(spark, pipe)
+    assert pipe.write_batch(raw) == {"all": 2, "ok200": 1, "miss": 1}
+    assert not any(seen) and _cache_empty(spark)
+
+    def failing(robust):
+        sinks = _f1_sinks(tmp_path / robust)
+        sinks[0] = SinkSpec(name="all", kind="test_rescue",
+                            path=str(tmp_path / robust / "all"), format="json")
+        rsc.set_healthy(sinks[0].path, False)
+        return Pipeline(wpl=wpl, omls=[oml], sinks=sinks, robust=robust,
+                        rescue_dir=str(tmp_path / robust / "rescue"))
+
+    pipe = failing("normal")
+    seen = _watch_cache(spark, pipe)
+    assert pipe.write_batch(raw) == {"all": 0, "ok200": 1, "miss": 1}
+    assert rsc.pending_sinks(str(tmp_path / "normal" / "rescue")) == ["all"]
+    assert not any(seen) and _cache_empty(spark)
+
+    pipe = failing("strict")
+    seen = _watch_cache(spark, pipe)
+    with pytest.raises(Exception):
+        pipe.write_batch(raw)
+    assert seen == [False] and _cache_empty(spark)
+
+    pipe = Pipeline(wpl=wpl, omls=[oml], sinks=_f1_sinks(tmp_path / "one")[:1])
+    seen = _watch_cache(spark, pipe)
+    assert pipe.write_batch(raw) == {"all": 2}
+    assert seen == [True]
+
+    spark.catalog.clearCache()
+    res = Pipeline(wpl=wpl, omls=[oml], sinks=_f1_sinks(tmp_path / "plan")).run_batch(raw)
+    assert res.sink_lines["all"].count() == 2
+    assert _cache_empty(spark)
+
+
+def test_default_sink_takes_modelled_records(spark):
+    """With no sink configured, the implicit memory sink receives every
+    parsed record, also those an OML model transformed."""
+    pipe = Pipeline(wpl=example_simple("parse.wpl"), omls=[example_simple("model.oml")])
+    raw = spark.createDataFrame([(v,) for v in _example_lines()], ["value"])
+    assert pipe.write_batch(raw) == {"default": 2}
+    lines = [r["line"] for r in pipe.run_batch(raw).sink_lines["default"].collect()]
+    assert len(lines) == 2 and all('"src_ip":"192.168.1.2"' in ln for ln in lines)

@@ -32,6 +32,32 @@ def test_lint_flags_payload_shuffle_and_passes_good_plans(spark, sf001_dir):
         assert lint(QUERIES[name][0](spark, sf001_dir)) == [], name
 
 
+def test_no_pushdown_skips_a_derived_column_named_like_a_scan_column(spark, sf001_dir):
+    """NO_PUSHDOWN matches the Filter's name#exprId, not its bare name: a
+    filter on a projected column that reuses the scanned column's name
+    (held above the projection by a nondeterministic alias) is not a
+    predicate the reader could take."""
+    from wp_motor_spark.wpl.compiler import _no_pushdown
+
+    docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
+    derived = docs.select(_no_pushdown(F.upper("text")).alias("text"))
+    assert "NO_PUSHDOWN" not in {c for c, _ in lint(derived.where(F.col("text") == "A"))}
+
+
+def test_no_pushdown_reads_every_filter_operator_line(spark, sf001_dir):
+    """A Filter whose condition prints as ``Filter CASE WHEN ...`` (no
+    parenthesis after the operator name) on scan columns is flagged."""
+    docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
+    case = (
+        F.when(F.col("text") == "a", F.col("doc_id") > 3)
+        .when(F.col("doc_id") < 2, F.lit(False))
+        .otherwise(F.col("doc_id") > 5)
+    )
+    q = docs.where(case)
+    assert " Filter CASE WHEN" in q._jdf.queryExecution().executedPlan().toString()
+    assert "NO_PUSHDOWN" in {c for c, _ in lint(q)}
+
+
 def test_lint_flags_growing_key_broadcasts(spark, sf001_dir):
     """The r16 BCAST_GROWING extension: a broadcast hint on an
     un-LIMITed aggregate or projection keyed by a growing scan column

@@ -17,8 +17,10 @@ Checks:
                 use built-ins or Arrow (ArrowEvalPython/mapInPandas).
   SCAN_NO_PRUNE a parquet scan reading >2/3 of the table's columns
                 under a narrow projection — check column pruning.
-  NO_PUSHDOWN   a Filter directly above a FileScan whose PushedFilters
-                is empty — predicate didn't reach the reader.
+  NO_PUSHDOWN   in a single-scan plan whose PushedFilters is empty, a
+                Filter on one of the FileScan's own output attributes
+                (matched by name#exprId) — predicate didn't reach the
+                reader.
   WIDE_SHUFFLE  Exchange carrying a text/binary column — document
                 payloads moving through a shuffle; shuffle digests/ids
                 instead.
@@ -220,6 +222,14 @@ def _broadcast_growing(analyzed: str) -> list[str]:
     return hits
 
 
+# an attribute reference as plans print it: name#exprId (a type suffix
+# such as the L of doc_id#0L is left off)
+_EXPR_ID_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*#\d+")
+# a Filter operator line of a physical-plan tree, whatever its condition
+# starts with: "+- Filter (...)", ":  +- *(1) Filter CASE WHEN ..."
+_FILTER_OP_RE = re.compile(r"[\s:+\-]*(?:\*\(\d+\)\s+)?Filter\s")
+
+
 def lint(df) -> list[tuple[str, str]]:
     qe = df._jdf.queryExecution()
     plan = qe.executedPlan().toString()
@@ -259,17 +269,17 @@ def lint(df) -> list[tuple[str, str]]:
                 and m
             ):
                 # only reliable for single-scan plans, and only when a
-                # Filter references a SCAN column by name — filters on
-                # derived columns (window ranks, post-explode values)
-                # legitimately cannot push
-                scan_cols = {
-                    c.split(":")[0] for c in m.group(1).split(",") if c
-                }
-                filter_cols = set()
+                # Filter references a SCAN output attribute (name#exprId)
+                # — filters on derived columns (window ranks,
+                # post-explode values, a projection aliased to a scan
+                # column's name) legitimately cannot push
+                out_m = re.search(r"FileScan parquet[^\[]*\[([^\]]*)\]", line)
+                scan_attrs = set(_EXPR_ID_RE.findall(out_m.group(1))) if out_m else set()
+                filter_attrs = set()
                 for fl in plan.splitlines():
-                    if fl.strip().startswith(("Filter (", "+- Filter", ": Filter")) or "Filter (" in fl:
-                        filter_cols |= set(re.findall(r"([A-Za-z_][A-Za-z_0-9]*)#\d+", fl))
-                if scan_cols & filter_cols:
+                    if _FILTER_OP_RE.match(fl):
+                        filter_attrs |= set(_EXPR_ID_RE.findall(fl))
+                if scan_attrs & filter_attrs:
                     out.append(
                         ("NO_PUSHDOWN",
                          "filter on scan columns but PushedFilters is empty")

@@ -77,8 +77,7 @@ def compile_condition(text: str, columns: list[str] | None = None) -> Column:
     col = _or(p, columns)
     if p.peek()[0] is not None:
         raise ConditionSyntaxError(f"trailing tokens: {p.toks[p.i:]}")
-    # compare.rs:28-44 — missing/NULL operand means the condition is false
-    return F.coalesce(col, F.lit(False))
+    return col
 
 
 def _or(p: _P, columns=None) -> Column:
@@ -101,8 +100,9 @@ def _unary(p: _P, columns=None) -> Column:
     kind, _ = p.peek()
     if kind == "not":
         p.pop()
-        # NULL (missing field) compares false; !false must be true
-        return ~F.coalesce(_unary(p, columns), F.lit(False))
+        # every comparison is already NULL-free (_compare), so a missing
+        # field's false negates to true
+        return ~_unary(p, columns)
     if kind == "lpar":
         p.pop()
         inner = _or(p, columns)
@@ -141,19 +141,25 @@ def _compare(p: _P, columns=None) -> Column:
     else:
         raise ConditionSyntaxError(f"expected value, got {val!r}")
     if op == "==":
-        return col == value
-    if op == "!=":
-        return col != value
-    if op == ">":
-        return col > value
-    if op == ">=":
-        return col >= value
-    if op == "<":
-        return col < value
-    if op == "<=":
-        return col <= value
-    if op == "=*":
+        cmp = col == value
+    elif op == "!=":
+        cmp = col != value
+    elif op == ">":
+        cmp = col > value
+    elif op == ">=":
+        cmp = col >= value
+    elif op == "<":
+        cmp = col < value
+    elif op == "<=":
+        cmp = col <= value
+    elif op == "=*":
         pat = lit if vk in ("str", "word") else str(val)
-        return col.like(_glob_to_like(pat))
-    raise ConditionSyntaxError(f"unknown operator {op!r}")
+        cmp = col.like(_glob_to_like(pat))
+    else:
+        raise ConditionSyntaxError(f"unknown operator {op!r}")
+    # compare.rs:28-44 — a missing/NULL operand makes the comparison
+    # false. The value is a non-NULL literal, so the comparison is NULL
+    # exactly when the field is; spelled as a conjunct, not coalesce(),
+    # both halves stay predicates a file reader can take.
+    return cmp & col.isNotNull()
 

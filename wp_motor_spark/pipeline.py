@@ -12,11 +12,28 @@ plan per sink:
 
 Infra side-channels (tests/instance/topology/sinks/infra.d/): miss
 (WPL-unmatched), residue (partial tails), error (empty OML output),
-default (no OML model matched). Everything is map-only + broadcast joins:
-at 100TB each branch is an independent column-pruned scan of the same
-source. Nothing is persisted: each sink runs ONE action, its write, and
-the line count it reports is observed on that same job (the deterministic
-wp_event_id keeps records aligned across the per-sink passes).
+default (no OML model matched). Everything is map-only + broadcast joins.
+Each sink runs ONE action, its write, and the line count it reports is
+observed on that same job.
+
+What is persisted: `run_batch` and `transform` only build plans and
+persist nothing. `write_batch` opens one `persist_scope` per call (one
+per micro-batch under `run_stream`) and shares, at MEMORY_AND_DISK, each
+frame that at least two of its reads go through:
+
+- a transformed data branch (post-OML, post-KnowDB, before the route
+  condition) that at least two sinks select;
+- the rule cascade (`MultiParser.cascade`: the scan, every rule's
+  tokenize and the first-match labels) when at least two readers remain
+  on it: the shared branches, plus each sink write that reads an
+  unshared branch.
+
+So N sink writes over one cascade cost one scan and one tokenize plus
+one spill to executor-local disk, instead of N scans and N tokenizes; a
+one-sink pipeline persists nothing. The scope releases every cache when
+`write_batch` returns, also when a write raises. Unshared reads stay
+independent column-pruned re-scans of the source, and the deterministic
+wp_event_id keeps records aligned across them.
 
 Batch and streaming share the plan: `run_stream` wraps the same batch
 assembly in foreachBatch (the reference's daemon mode).
@@ -24,6 +41,7 @@ assembly in foreachBatch (the reference's daemon mode).
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -31,6 +49,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from wp_motor_spark.conditions import compile_condition
 from wp_motor_spark.config import _INFRA
 from wp_motor_spark.oml.compiler import OmlTransform, compile_oml
+from wp_motor_spark.session import persist_scope, scoped_persist
 from wp_motor_spark.sinks.formats import format_lines
 from wp_motor_spark.sinks.spec import SinkSpec
 from wp_motor_spark.wpl.compiler import MultiParser
@@ -95,11 +114,13 @@ class Pipeline:
         self.models: list[OmlTransform] = [
             m for m in (compile_oml(t) for t in (omls or [])) if m.model.enable
         ]
-        # None = caller configured nothing -> default memory sink;
-        # an explicit [] means NO delivery (engine.rs skip_sink)
+        # None = caller configured nothing -> one memory sink that takes
+        # every record, modelled or not; an explicit [] means NO delivery
+        # (engine.rs skip_sink)
         self.sinks = (
             [SinkSpec(name="default", kind="memory")] if sinks is None else list(sinks)
         )
+        self._catch_all = self.sinks[0] if sinks is None else None
         self.knowdb = knowdb
         self.tags = tags or {}
         # failed sink writes spool here as RescueEntry JSONL for wprescue
@@ -127,6 +148,10 @@ class Pipeline:
     def transform(self, raw: DataFrame, col: str = "value") -> dict[str, DataFrame]:
         """Raw lines -> named branches: one per rule (transformed), plus
         miss/residue/default/error side-channels."""
+        return self._transform(raw, col)[1]
+
+    def _transform(self, raw: DataFrame, col: str) -> tuple[DataFrame, dict[str, DataFrame]]:
+        """``transform``'s branches and the rule cascade they all read."""
         # mechanism metadata: ONE wp_event_id per SourceEvent, assigned at
         # ingest (processor.rs:143-150) and DETERMINISTIC — uuid() would be
         # re-evaluated on every action (each sink write, count, residue
@@ -136,7 +161,8 @@ class Pipeline:
         # parse() like any other extra input column.
         if "wp_event_id" not in raw.columns:
             raw = raw.withColumn("wp_event_id", _event_uuid(col, self.src_key))
-        parsed = self.parser.parse(raw, col)
+        cascade = self.parser.cascade(raw, col)
+        parsed = self.parser.parse(raw, col, cascade)
         branches: dict[str, DataFrame] = {}
         residue_parts: list[DataFrame] = []
         for key, df in parsed.items():
@@ -187,7 +213,7 @@ class Pipeline:
             for r in residue_parts[1:]:
                 res = res.unionByName(r)
             branches["residue"] = res.where(F.length("value") > 0)
-        return branches
+        return cascade, branches
 
     def monitor(self, raw: DataFrame, col: str = "value") -> DataFrame:
         """Parse-stage stats: counts per (rule, disposition) — the monitor
@@ -208,35 +234,61 @@ class Pipeline:
     def run_batch(self, raw: DataFrame, col: str = "value") -> PipelineResult:
         """Assemble every sink's formatted output. Data branches fan out to
         all sinks whose condition matches (oml.rs:351-363); infra channels
-        (miss/residue/error) go to same-named sinks when declared."""
-        result = PipelineResult(branches=self.transform(raw, col))
+        (miss/residue/error) go to same-named sinks when declared. Builds
+        the plan only: nothing is persisted."""
+        return self._assemble(raw, col, share=False)
+
+    def _reads(self, spec: SinkSpec, branches: dict[str, DataFrame]) -> list[str]:
+        """The branches one sink's lines are made of."""
         # a sink named "intercept" is an ordinary business sink (see
         # config._INFRA) and joins the condition fan-out like any other
         # name; "default" is infra, so each data branch is a rule key
         # with an OML model
-        data_branches = {k: v for k, v in result.branches.items() if k not in _INFRA}
-        for spec in self.sinks:
-            if spec.name in _INFRA:
-                src = result.branches.get(spec.name)
-                if src is not None:
-                    result.sink_lines[spec.name] = format_lines(
-                        src, spec.format if spec.format != "json" or spec.name != "miss" else "raw"
-                    )
-                continue
+        data = [k for k in branches if k not in _INFRA]
+        if spec is self._catch_all:
+            return [k for k in ("default", *data) if k in branches]
+        if spec.name in _INFRA:
+            return [spec.name] if spec.name in branches else []
+        # sink groups select which OML models feed them (sink.toml
+        # `oml = [...]`, dispatcher/oml.rs:59-70); rule-key selection
+        # (route file `rule = [...]`) globs the branch key directly
+        return [
+            k for k in data
+            if _model_selected(spec.models, self._model_for(k).model.name)
+            and _model_selected(spec.rules, k)
+        ]
+
+    def _share(
+        self, cascade: DataFrame, branches: dict[str, DataFrame], reads: list[list[str]]
+    ) -> None:
+        """Persist, in the open persist_scope, each frame that at least two
+        reads go through (module docstring). The cascade goes first, so
+        the shared branches' caches are built from its cache."""
+        fed = Counter(k for keys in reads for k in keys)
+        shared = {k for k, n in fed.items() if n >= 2}
+        on_cascade = len(shared) + sum(1 for keys in reads if set(keys) - shared)
+        if on_cascade >= 2:
+            scoped_persist(cascade)
+        for k in shared:
+            scoped_persist(branches[k])
+
+    def _assemble(self, raw: DataFrame, col: str, share: bool) -> PipelineResult:
+        cascade, branches = self._transform(raw, col)
+        reads = [self._reads(spec, branches) for spec in self.sinks]
+        if share:
+            self._share(cascade, branches, reads)
+        result = PipelineResult(branches=branches)
+        for spec, keys in zip(self.sinks, reads):
             parts = []
-            for key, df in data_branches.items():
-                # sink groups select which OML models feed them
-                # (sink.toml `oml = [...]`, dispatcher/oml.rs:59-70)
-                if not _model_selected(spec.models, self._model_for(key).model.name):
+            for key in keys:
+                sub = branches[key]
+                if key in _INFRA:
+                    fmt = "raw" if key == "miss" and spec.format == "json" else spec.format
+                    parts.append(format_lines(sub, fmt))
                     continue
-                # rule-key selection (route file `rule = [...]`; branches
-                # are keyed by WPL rule, so the glob applies directly)
-                if not _model_selected(spec.rules, key):
-                    continue
-                sub = df
                 if spec.condition:
-                    cond = compile_condition(spec.condition, df.columns)
-                    sub = df.where(cond if spec.filter_expect else ~cond)
+                    cond = compile_condition(spec.condition, sub.columns)
+                    sub = sub.where(cond if spec.filter_expect else ~cond)
                 # sink-level tags inject into every record THIS sink
                 # routes (dispatcher append_pre_tags; other sinks of the
                 # same record stay untouched — the dispatcher fast-path
@@ -318,34 +370,38 @@ class Pipeline:
 
         With ``rescue_dir`` set, a failing sink write spools its formatted
         lines as RescueEntry JSONL instead of failing the batch
-        (src/sinks/rescue.rs); ``replay_rescue`` re-delivers them."""
-        res = self.run_batch(raw, col)
+        (src/sinks/rescue.rs); ``replay_rescue`` re-delivers them.
+
+        Frames that several writes read are persisted for the call and
+        released when it returns or raises (module docstring)."""
         counts: dict[str, int] = {}
-        for spec in self.sinks:
-            lines = res.sink_lines.get(spec.name)
-            if lines is None:
-                continue
-            try:
-                counts[spec.name] = self._write_sink(spec, lines)
-            except Exception as exc:
-                if self.robust == "strict":
-                    raise  # Terminate: no rescue masks a failing sink
-                if self.rescue_dir is not None:
-                    from wp_motor_spark.sinks import rescue as rsc
+        with persist_scope():
+            res = self._assemble(raw, col, share=True)
+            for spec in self.sinks:
+                lines = res.sink_lines.get(spec.name)
+                if lines is None:
+                    continue
+                try:
+                    counts[spec.name] = self._write_sink(spec, lines)
+                except Exception as exc:
+                    if self.robust == "strict":
+                        raise  # Terminate: no rescue masks a failing sink
+                    if self.rescue_dir is not None:
+                        from wp_motor_spark.sinks import rescue as rsc
 
-                    rsc.rescue_lines(lines, self.rescue_dir, spec.name)
-                elif self.robust != "debug":
-                    raise
-                else:
-                    # debug tolerates the loss but must leave a trace —
-                    # silent drops are undebuggable
-                    import logging
+                        rsc.rescue_lines(lines, self.rescue_dir, spec.name)
+                    elif self.robust != "debug":
+                        raise
+                    else:
+                        # debug tolerates the loss but must leave a trace —
+                        # silent drops are undebuggable
+                        import logging
 
-                    logging.getLogger(__name__).warning(
-                        "sink %s write failed (robust=debug, no rescue "
-                        "spool — lines dropped): %s", spec.name, exc
-                    )
-                counts[spec.name] = 0
+                        logging.getLogger(__name__).warning(
+                            "sink %s write failed (robust=debug, no rescue "
+                            "spool — lines dropped): %s", spec.name, exc
+                        )
+                    counts[spec.name] = 0
         return counts
 
     def replay_rescue(

@@ -1923,7 +1923,7 @@ class MultiParser:
         mp.rules = [self.rules[i] for i in order]
         return mp
 
-    def _cascade(self, df: DataFrame, col: str) -> DataFrame:
+    def cascade(self, df: DataFrame, col: str = "value") -> DataFrame:
         """``df`` plus every rule's ``__parts_i`` (one regex evaluation per
         rule per row, materialized behind the _no_pushdown barrier like
         extract's __parts) and the first-match _rule/_disposition/_residue."""
@@ -1964,7 +1964,7 @@ class MultiParser:
         )
 
     def label(self, df: DataFrame, col: str = "value") -> DataFrame:
-        return self._cascade(df, col).select(*df.columns, *_LABELS)
+        return self.cascade(df, col).select(*df.columns, *_LABELS)
 
     def diagnose(self, df: DataFrame, col: str = "value", max_depth: int = 8) -> DataFrame:
         """Deepest-failure diagnostics for missed rows (parser.rs:82-113):
@@ -2010,7 +2010,9 @@ class MultiParser:
             F.col("__diag.d").alias("_parse_depth"),
         )
 
-    def parse(self, df: DataFrame, col: str = "value") -> dict[str, DataFrame]:
+    def parse(
+        self, df: DataFrame, col: str = "value", cascade: DataFrame | None = None
+    ) -> dict[str, DataFrame]:
         """Split into per-rule typed DataFrames + '__miss__' branch.
 
         One tokenize per rule per row: rule i's branch is the cascade's
@@ -2019,8 +2021,13 @@ class MultiParser:
         disposition_col/residue_col over those parts, not from the R-way
         cascade chains, and no guard runs again: the cascade hit holds
         the guards already.
+
+        ``cascade`` is ``self.cascade(df, col)`` when the caller already
+        holds it (``Pipeline.write_batch`` persists it to share one
+        tokenize across several sink writes); None builds it here.
         """
-        cascade = self._cascade(df, col)
+        if cascade is None:
+            cascade = self.cascade(df, col)
         out: dict[str, DataFrame] = {}
         extra = [c for c in df.columns if c != col]
         for i, cr in enumerate(self.rules):
