@@ -1,12 +1,17 @@
-"""Benchmark runner: executes the headline query suite at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+"""Benchmark runner: the one timer of the driver query suite. Times every
+query (or only the named ones) at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-`value` is the wall-clock total across all queries (one shared session;
-per-query numbers include plan build + execution, forced via a count-style
-action so the timing measures the engine, not result serialization).
+    python bench.py                        # all queries
+    python bench.py q1_pricing_summary ... # only these
+
+`value` is the wall-clock total across the timed queries (one shared
+session; per-query numbers include plan build + execution, forced via a
+hash of every output column so the timing measures the engine, not result
+serialization). A scaling check is two runs with the same names at two
+$SPARK_GRAFT_SF_DIRs.
 """
 
 from __future__ import annotations
@@ -34,6 +39,11 @@ def main() -> None:
     from wp_motor_spark.queries import QUERIES
     from wp_motor_spark.session import get_spark, persist_scope
 
+    names = sys.argv[1:] or list(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"bench.py: unknown query {', '.join(unknown)}")
+
     spark = get_spark(app_name="wp_motor_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -55,7 +65,8 @@ def main() -> None:
     # shared-box contention vs a plan regression from the JSON alone
     noise: dict[str, dict] = {}
     for _pass in range(2):
-        for name, (fn, _sql) in QUERIES.items():
+        for name in names:
+            fn = QUERIES[name][0]
             if name in errors:
                 continue  # failed on pass 1 — don't re-raise, keep the slot
             try:
@@ -112,7 +123,7 @@ def main() -> None:
         "sf": sf_val,
         "cc_telemetry": list(CC_TELEMETRY),
         # shared-box context: same-code timings swing up to ~1.6x with
-        # other tenants' load (PROFILE.md measurement discipline section)
+        # other tenants' load
         "loadavg_1m": round(os.getloadavg()[0], 2),
         "query_noise": noise,
     }

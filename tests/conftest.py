@@ -5,7 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from wp_motor_spark.session import get_spark  # noqa: E402
+from wp_motor_spark.session import get_spark, persist_scope  # noqa: E402
 
 
 @pytest.fixture(scope="session")
@@ -13,6 +13,15 @@ def spark():
     s = get_spark(app_name="wp_motor_spark_tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _persist_scope():
+    """Run each test inside one persist_scope, so an operator that
+    persists an intermediate it does not return (the dedup pair
+    pipelines) leaves no cache to the next test."""
+    with persist_scope():
+        yield
 
 
 # The wp-motor source checkout the reference-parity tests read golden

@@ -165,6 +165,52 @@ rule beta {
     assert rules == {"alpha", "beta"}
 
 
+def test_error_branch_unions_all_empty_model_rules(spark):
+    """Two rules routed to one model with no output fields: BOTH rules'
+    records reach the error sink, not just the last rule's."""
+    wpl = """
+package p {
+  rule a { (symbol(A):tag,chars:rest) }
+  rule b { (symbol(B):tag,chars:rest) }
+}
+"""
+    empty_oml = """
+name : broken
+rule : p/*
+---
+_ = read(rest);
+"""
+    pipe = Pipeline(
+        wpl=wpl,
+        omls=[empty_oml],
+        sinks=[SinkSpec(name="error", format="json"), SinkSpec(name="miss", format="raw")],
+    )
+    raw = spark.createDataFrame([("A one",), ("B two",), ("C three",)], ["value"])
+    assert pipe.write_batch(raw) == {"error": 2, "miss": 1}
+
+
+def test_residue_channel_reads_the_cascade_once(spark):
+    """Partial tails of two rules reach the residue sink as (rule, tail),
+    built by one filter over the rule cascade: no Union of per-rule
+    frames in its plan."""
+    wpl = """
+rule alpha { (symbol(A):tag,digit:n) }
+rule beta { (symbol(B):tag,digit:n) }
+"""
+    pipe = Pipeline(wpl=wpl, omls=[], sinks=[SinkSpec(name="residue", format="raw")])
+    raw = spark.createDataFrame(
+        [("A 1234567890 xy",), ("B 9876543210 zw",), ("A 5",), ("nothing at all",)],
+        ["value"],
+    )
+    lines = pipe.run_batch(raw).sink_lines["residue"]
+    got = sorted(r["line"] for r in lines.collect())
+    assert got == [" xy", " zw"]
+    res = pipe.transform(raw)["residue"].collect()
+    assert sorted((r["rule"], r["value"]) for r in res) == [("alpha", " xy"), ("beta", " zw")]
+    plan = lines._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan
+
+
 def test_sink_model_selection(spark):
     """Sink groups select their OML models (sink.toml oml = [...] globs)."""
     from wp_motor_spark.pipeline import Pipeline
@@ -644,9 +690,7 @@ def _cache_empty(spark) -> bool:
 
 def _watch_cache(spark, pipe) -> list[bool]:
     """Record, at each of pipe's sink writes, whether the CacheManager is
-    empty. Starts from an empty one: a persist made outside any
-    persist_scope (another test's) stays cached for the session."""
-    spark.catalog.clearCache()
+    empty."""
     seen = []
     write = pipe._write_sink
 
@@ -722,7 +766,6 @@ def test_write_batch_leaks_no_cache(spark, tmp_path):
     assert pipe.write_batch(raw) == {"all": 2}
     assert seen == [True]
 
-    spark.catalog.clearCache()
     res = Pipeline(wpl=wpl, omls=[oml], sinks=_f1_sinks(tmp_path / "plan")).run_batch(raw)
     assert res.sink_lines["all"].count() == 2
     assert _cache_empty(spark)

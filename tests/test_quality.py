@@ -35,6 +35,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wp_motor_spark.operators import dedup, multimodal as mm, similarity
+from wp_motor_spark.session import scoped_persist
 
 
 @pytest.fixture(scope="module")
@@ -391,7 +392,7 @@ def test_pq_codes_deterministic_and_beats_single_codebook(emb):
     (m*log2(k) = 32 bits) vs 4 bits total, and (c) a sane floor for
     near-random synthetic embeddings (~0.67 at 16 words / 8-dim
     subspace; info-theoretic, not a fit deficiency)."""
-    out = similarity.pq_codes(emb).cache()
+    out = scoped_persist(similarity.pq_codes(emb))  # released after the test
 
     def sig(df):
         return df.agg(

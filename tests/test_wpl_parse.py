@@ -199,6 +199,18 @@ def test_guard_failure_falls_through_the_cascade(spark):
     }
     assert {r["value"] for r in branches["miss"].collect()} == {"x y z q", bad_json}
 
+
+def test_duplicate_rule_key_is_a_compile_error():
+    """Two rules with one package/name key would share one parse branch,
+    so rows the first one labels would reach no channel: MultiParser
+    refuses them and names the key."""
+    from wp_motor_spark.wpl.compiler import WplCompileError
+
+    wpl = "package p { rule r { (digit:a) } rule r { (symbol(x), chars:b) } }"
+    with pytest.raises(WplCompileError, match="p/r"):
+        MultiParser(wpl)
+
+
 def test_tag_annotation(spark):
     wpl = '#[tag(env:"prod")] rule t { (digit:n) }'
     cr = compile_rule(parse_wpl(wpl)[0])

@@ -205,6 +205,10 @@ def minhash_lsh_pairs(
     `bands` (band, bucket) keys -> ONE shuffle on the bucket key ->
     in-bucket pair expansion -> verification joins only candidate ids back
     to the (id, shingle-hash-set) table. Documents themselves never shuffle.
+
+    The (id, hash-set) table is ``scoped_persist``ed and not returned:
+    callers must open a ``session.persist_scope`` around the build and
+    the action, or the cache stays in the session.
     """
     rows_per_band = num_hashes // bands
     # (id, hash-set) is consumed 3x (signature + both verification sides);
@@ -449,7 +453,11 @@ def fingerprint_pairs(
     Smaller blocks (more of them) raise the guaranteed distance but
     shrink the key space: n_blocks=8 means 8-bit keys, so in-bucket
     populations grow ~n/256 — fine to ~10^7 items, then add a secondary
-    key."""
+    key.
+
+    The fingerprint table is ``scoped_persist``ed and not returned:
+    callers must open a ``session.persist_scope`` around the build and
+    the action, or the cache stays in the session."""
     if 64 % n_blocks:
         raise ValueError("n_blocks must divide 64")
     if max_hamming > n_blocks - 1:

@@ -163,56 +163,43 @@ class Pipeline:
             raw = raw.withColumn("wp_event_id", _event_uuid(col, self.src_key))
         cascade = self.parser.cascade(raw, col)
         parsed = self.parser.parse(raw, col, cascade)
+        miss = parsed.pop("__miss__")
+        # constant fields, each only where the branch lacks it: a parsed
+        # field wins over a source tag (processor.rs:70-100), a tag over
+        # the mechanism metadata (09-metadata.md: wp_src_key from the
+        # source identifier, wp_src_ip passthrough from net sources).
+        # Unused ones die in column pruning; wp_event_id came in at ingest.
+        consts = {k: F.lit(v) for k, v in self.tags.items()}
+        consts.setdefault(
+            "wp_src_key", F.lit(self.src_key) if self.src_key else F.lit(None).cast("string")
+        )
+        consts.setdefault("wp_src_ip", F.lit(None).cast("string"))
         branches: dict[str, DataFrame] = {}
-        residue_parts: list[DataFrame] = []
-        for key, df in parsed.items():
-            if key == "__miss__":
-                branches["miss"] = df
-                continue
-            ok = df.where(F.col("_disposition").isin("success", "partial"))
-            # source tags: constant fields, only if absent (processor.rs:70-100)
-            for k, v in self.tags.items():
-                if k not in ok.columns:
-                    ok = ok.withColumn(k, F.lit(v))
-            # mechanism metadata (09-metadata.md): wp_event_id per record,
-            # wp_src_key from the source identifier, wp_src_ip passthrough
-            # (net sources attach it; file sources have no upstream peer).
-            # Declared only-if-absent; unused ones die in column pruning.
-            # wp_event_id was added at ingest above and parse() keeps it.
-            if "wp_src_key" not in ok.columns:
-                ok = ok.withColumn(
-                    "wp_src_key",
-                    F.lit(self.src_key) if self.src_key else F.lit(None).cast("string"),
-                )
-            if "wp_src_ip" not in ok.columns:
-                ok = ok.withColumn("wp_src_ip", F.lit(None).cast("string"))
-            # partial-match tails -> residue channel (processor.rs:35-49)
-            residue_parts.append(
-                ok.where(F.col("_disposition") == "partial").select(
-                    F.lit(key).alias("rule"), F.col("_residue").alias("value")
-                )
-            )
+
+        def union(name: str, df: DataFrame) -> None:
+            # every rule's rows reach a shared channel, not just the last
+            # rule's (processor.rs default/error channel semantics)
+            old = branches.get(name)
+            branches[name] = df if old is None else old.unionByName(df, allowMissingColumns=True)
+
+        for key, ok in parsed.items():
+            # a branch holds only its rule's first-match hits
+            ok = ok.withColumns({k: c for k, c in consts.items() if k not in ok.columns})
             model = self._model_for(key)
             if model is None:
-                # every model-less rule's rows reach the default sink — the
-                # reference routes ALL unmatched records there, not just the
-                # first rule's (processor.rs default-channel semantics)
-                branches["default"] = (
-                    branches["default"].unionByName(ok, allowMissingColumns=True)
-                    if "default" in branches
-                    else ok
-                )
+                union("default", ok)
                 continue
             out = model.apply(ok.drop("_rule", "_disposition", "_residue"), self.knowdb)
             if out.columns == ["__err_kind"]:
-                branches["error"] = out
+                union("error", out)
             else:
                 branches[key] = out
-        if residue_parts:
-            res = residue_parts[0]
-            for r in residue_parts[1:]:
-                res = res.unionByName(r)
-            branches["residue"] = res.where(F.length("value") > 0)
+        branches["miss"] = miss
+        # partial-match tails -> residue channel (processor.rs:35-49), one
+        # filter over the cascade's first-match labels
+        branches["residue"] = cascade.where(
+            (F.col("_disposition") == "partial") & (F.length("_residue") > 0)
+        ).select(F.col("_rule").alias("rule"), F.col("_residue").alias("value"))
         return cascade, branches
 
     def monitor(self, raw: DataFrame, col: str = "value") -> DataFrame:

@@ -1338,9 +1338,6 @@ def _typed_column(out: FieldOutput, raw: Column) -> Column:
         )
         return F.when(s.isNotNull(), F.when(simple, fast).otherwise(slow))
     if dtype == "kvarr" and out.kv_run:
-        if out.kv_pair_rx is None:  # legacy shape, no pair regex recorded
-            m = F.str_to_map(s, F.lit(out.kv_sep), F.lit(r"\s*[:=]\s*"))
-            return F.transform_values(m, lambda k, v: _kv_value_norm(v))
         # Re-extract pairs with the SAME pair regex the run matched (key
         # group 1, value group 2) — str_to_map split the run on kv_sep
         # regardless of quoting, so 'a="foo bar" b=1' under \s sep
@@ -1882,6 +1879,13 @@ class MultiParser:
         if isinstance(rules, str):
             rules = parse_wpl(rules)
         self.rules = [r if isinstance(r, CompiledRule) else compile_rule(r) for r in rules]
+        # parse() keeps one branch per key: a second rule with the same key
+        # would label rows that then reach no branch
+        seen: set[str] = set()
+        for cr in self.rules:
+            if cr.key in seen:
+                raise WplCompileError(f"duplicate rule key {cr.key!r}")
+            seen.add(cr.key)
 
     def hit_counts(self, df: DataFrame, col: str = "value", sample_rows: int = 10000) -> dict:
         """Per-rule first-match hit counts over a bounded sample — the
