@@ -133,16 +133,19 @@ def main() -> None:
     # Persist the full artifact next to the repo: the driver stores only
     # the stdout TAIL, which truncated 13 queries' timings in round 5 —
     # the file keeps every per-query number regardless of pipe limits.
-    try:
-        out_path = os.environ.get(
-            "SPARK_GRAFT_BENCH_OUT",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_full.json"),
-        )
-        with open(out_path, "w") as fh:
-            json.dump(result, fh, indent=1, sort_keys=True)
-    except OSError:
-        pass  # read-only checkout: stdout line remains the artifact
+    # A run of named queries prints its line only, so it never replaces
+    # the last full-suite artifact.
+    if not sys.argv[1:]:
+        try:
+            out_path = os.environ.get(
+                "SPARK_GRAFT_BENCH_OUT",
+                os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "BENCH_full.json"),
+            )
+            with open(out_path, "w") as fh:
+                json.dump(result, fh, indent=1, sort_keys=True)
+        except OSError:
+            pass  # read-only checkout: stdout line remains the artifact
     spark.stop()
 
 

@@ -289,6 +289,28 @@ def test_wparse_wpl_directory_override(spark, tmp_path):
     assert any("addr=10.1.2.3" in ln for ln in lines)
 
 
+def test_wparse_wpl_directory_skips_same_key_generator_dual(spark, tmp_path):
+    """--wpl DIR reads the rule set the way the workspace loader does: a
+    gen_rule.wpl that redefines parse.wpl's key is skipped, so the sample
+    line parses instead of the duplicate key stopping the run."""
+    import shutil
+
+    from wp_motor_spark.cli import main as cli_main
+
+    rules = tmp_path / "rules"
+    rules.mkdir()
+    shutil.copy(f"{EXAMPLE_SIMPLE}/parse.wpl", rules / "parse.wpl")
+    shutil.copy(f"{EXAMPLE_SIMPLE}/parse.wpl", rules / "gen_rule.wpl")
+    sink = tmp_path / "out"
+    rc = cli_main([
+        "wparse", "--wpl", str(rules), "--input", f"{EXAMPLE_SIMPLE}/sample.dat",
+        "--sink", f"default={sink}:kv",  # no OML -> default branch
+    ])
+    assert rc == 0
+    lines = [r["value"] for r in spark.read.text(str(sink)).collect()]
+    assert len(lines) == 1 and "sip=" in lines[0]
+
+
 def test_wparse_work_root_workspace_mode(spark, tmp_path, capsys, monkeypatch):
     """facade/args.rs + 01-cli README: the reference's primary form is
     `wparse batch --work-root <ws>` — wpl/oml/sinks/SOURCES all come

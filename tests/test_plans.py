@@ -4,6 +4,7 @@ for dims, map-only parse/transform paths — and the persist scope that
 releases the InMemoryRelations query builders cache.
 """
 
+import contextvars
 import re
 import threading
 
@@ -357,8 +358,11 @@ def test_persist_scope_releases_on_exit_and_on_error(spark):
 
 def test_persist_scope_releases_only_its_own_frame(spark):
     """A persist made outside any scope belongs to the caller; a nested
-    scope releases only what was persisted since it opened."""
-    owned = scoped_persist(spark.range(107).selectExpr("id * 7 AS x"))
+    scope releases only what was persisted since it opened. The owned
+    persist runs in a fresh context, outside the scope each test runs in."""
+    owned = contextvars.Context().run(
+        scoped_persist, spark.range(107).selectExpr("id * 7 AS x")
+    )
     owned.count()
     try:
         with persist_scope():

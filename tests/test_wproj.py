@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import json
 
-from conftest import REF, needs_reference
+from conftest import EXAMPLE_SIMPLE, REF, needs_reference
 from wp_motor_spark.wproj import main
 
 INSTANCE = f"{REF}/tests/instance"
@@ -65,6 +65,22 @@ def test_rule_parse_offline_on_reference_sample(spark, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "/example/simple/nginx" in out and "success" in out
+
+
+def test_rule_parse_skips_same_key_generator_dual(spark, tmp_path, capsys):
+    """A gen_rule.wpl beside parse.wpl that redefines its rule key is the
+    reference layout; rule parse reads the directory the way the workspace
+    loader does (parse.wpl wins), so the key compiles once."""
+    import shutil
+
+    simple = tmp_path / "proj" / "wpl" / "example" / "simple"
+    simple.mkdir(parents=True)
+    for name in ("parse.wpl", "sample.dat"):
+        shutil.copy(f"{EXAMPLE_SIMPLE}/{name}", simple / name)
+    shutil.copy(f"{EXAMPLE_SIMPLE}/parse.wpl", simple / "gen_rule.wpl")
+    assert main(["rule", "parse", "-w", str(tmp_path / "proj")]) == 0
+    out = capsys.readouterr().out.splitlines()
+    assert out == ["/example/simple/nginx  success  1"]
 
 
 def test_data_stat_and_clean(tmp_path, capsys):

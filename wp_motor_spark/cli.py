@@ -45,18 +45,14 @@ def _build_pipeline(args):
     import glob
     import os
 
+    from wp_motor_spark.config import read_wpl_dir
     from wp_motor_spark.pipeline import Pipeline
     from wp_motor_spark.sinks import SinkSpec
 
     # --wpl accepts a rule FILE or a rules DIRECTORY (03-wparse.md: the
     # flag is documented as "WPL rules directory override")
     if os.path.isdir(args.wpl):
-        wpl = "\n".join(
-            open(p).read()
-            for p in sorted(
-                glob.glob(os.path.join(args.wpl, "**", "*.wpl"), recursive=True)
-            )
-        )
+        wpl = "\n".join(read_wpl_dir(args.wpl))
     else:
         wpl = open(args.wpl).read()
     omls: list[str] = []

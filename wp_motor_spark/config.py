@@ -171,6 +171,34 @@ def model_dirs(root: str, conf: dict) -> tuple[str, str]:
     return one("wpl"), one("oml")
 
 
+def read_wpl_dir(wpl_dir: str) -> list[str]:
+    """The rule set of a WPL directory: the text of every ``*.wpl`` under
+    it, ``parse.wpl`` files first. A later file that redefines a rule key
+    (a generator dual such as ``gen_rule.wpl`` beside its ``parse.wpl``)
+    or that does not parse is skipped, so the texts joined hold each key
+    once. The workspace loader, ``wparse --wpl DIR`` and ``wproj rule
+    parse`` all read a rule directory through here."""
+    from wp_motor_spark.wpl.parser import parse_wpl
+
+    texts: list[str] = []
+    seen_keys: set[str] = set()
+    paths = sorted(
+        glob.glob(os.path.join(wpl_dir, "**", "*.wpl"), recursive=True),
+        key=lambda p: (0 if os.path.basename(p) == "parse.wpl" else 1, p),
+    )
+    for p in paths:
+        text = open(p).read()
+        try:
+            keys = {r.key for r in parse_wpl(text)}
+        except Exception:
+            continue
+        if keys & seen_keys:
+            continue
+        seen_keys |= keys
+        texts.append(text)
+    return texts
+
+
 def load_workspace(root: str, out_root: str | None = None) -> Workspace:
     """Parse a reference-layout workspace. ``out_root``, when given,
     rebases every sink's relative output path (tests never write into the
@@ -188,25 +216,7 @@ def load_workspace(root: str, out_root: str | None = None) -> Workspace:
     src_dir = os.path.join(root, topo.get("sources", "topology/sources"))
     sink_dir = os.path.join(root, topo.get("sinks", "topology/sinks"))
 
-    # WPL: parse.wpl files take priority; other .wpl (e.g. gen_rule.wpl
-    # generator duals) are skipped when they'd redefine the same rule key
-    from wp_motor_spark.wpl.parser import parse_wpl
-
-    seen_keys: set[str] = set()
-    paths = sorted(
-        glob.glob(os.path.join(wpl_dir, "**", "*.wpl"), recursive=True),
-        key=lambda p: (0 if os.path.basename(p) == "parse.wpl" else 1, p),
-    )
-    for p in paths:
-        text = open(p).read()
-        try:
-            keys = {r.key for r in parse_wpl(text)}
-        except Exception:
-            continue
-        if keys & seen_keys:
-            continue
-        seen_keys |= keys
-        ws.wpl_texts.append(text)
+    ws.wpl_texts = read_wpl_dir(wpl_dir)
 
     for p in sorted(glob.glob(os.path.join(oml_dir, "*.oml"))):
         ws.oml_texts.append(open(p).read())

@@ -625,21 +625,20 @@ def cmd_know_clean(root: str) -> int:
 def cmd_rule_parse(root: str, sample: str | None) -> int:
     """Offline parsing test (wproj rule parse): run every workspace rule
     over a sample file and print per-rule hit/miss counts."""
+    import glob as g
+
+    from wp_motor_spark.config import read_wpl_dir
     from wp_motor_spark.session import get_spark
     from wp_motor_spark.wpl import MultiParser
 
-    import glob as g
-
-    texts = [
-        open(p).read()
-        for p in sorted(g.glob(os.path.join(root, "wpl/**/*.wpl"), recursive=True))
-    ]
+    wpl_dir = _model_dirs(root)[0]
+    texts = read_wpl_dir(wpl_dir)
     if not texts:
         print("wproj rule parse: no wpl files", file=sys.stderr)
         return 2
     if sample is None:
         cands = sorted(
-            g.glob(os.path.join(root, "wpl/**/sample.dat"), recursive=True)
+            g.glob(os.path.join(wpl_dir, "**", "sample.dat"), recursive=True)
         ) + sorted(g.glob(os.path.join(root, "data/*.dat")))
         if not cands:
             print("wproj rule parse: no sample data found", file=sys.stderr)
