@@ -18,7 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wp_motor_spark.queries import QUERIES, q1_pricing_summary
+from wp_motor_spark.queries import QUERIES
+from wp_motor_spark.queries.tpch import q1_pricing_summary
 
 
 def entry(spark: SparkSession) -> DataFrame:

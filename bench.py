@@ -1,6 +1,7 @@
 """Benchmark runner: the one timer of the driver query suite. Times every
 query (or only the named ones) at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+/root/testdata/sf0.1) on local[N] (N = $SPARK_GRAFT_CPUS, else the CPUs
+the process may use) and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -49,9 +50,11 @@ def main() -> None:
 
     _warm_python_workers(spark)
 
-    # Warm the JVM/codegen path so query 1 doesn't absorb session startup.
+    # Warm the JVM/codegen path with the flagship query (the one
+    # __spark_entry__.entry runs) so the first timed query doesn't absorb
+    # session startup.
     with persist_scope():
-        next(iter(QUERIES.values()))[0](spark, sf_dir).limit(1).count()
+        QUERIES["q1_pricing_summary"][0](spark, sf_dir).limit(1).count()
 
     # Two full passes, best-of-2 per query: the box is shared, so a single
     # shot can catch a noisy-neighbor spike (observed 7x swings on the same
@@ -152,9 +155,9 @@ def main() -> None:
 def _warm_python_workers(spark) -> None:
     """Spin up one Arrow python worker per core (numpy/pandas imported) so
     the first pandas-UDF query measures compute, not worker fork+import."""
-    import os
-
     from pyspark.sql.functions import col, pandas_udf
+
+    from wp_motor_spark.session import local_cores
 
     @pandas_udf("long")
     def _noop(s: pd.Series) -> pd.Series:
@@ -162,7 +165,7 @@ def _warm_python_workers(spark) -> None:
 
         return s
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = local_cores()
     rng = spark.range(cores * 10).repartition(cores)
     # each Arrow eval type forks its own worker pool — warm all three used
     # by the suite (scalar pandas UDF, mapInPandas, grouped applyInPandas)

@@ -180,10 +180,11 @@ def test_prefix_containment_short_doc_bucket_fix(spark, tmp_path):
     met its container ("ab" bucketed as "ab", container "abcdef" as
     "abcd"). The short-doc broadcast pass must flag it with the minimal
     (text, doc_id) container — and the Spark result must match the
-    DuckDB oracle executing PREFIX_CONTAIN_SQL on the same parquet."""
+    DuckDB oracle executing the query's oracle SQL on the same parquet."""
     import duckdb
 
-    from wp_motor_spark import queries as q
+    import __spark_entry__ as entry_mod
+    from wp_motor_spark.queries.dedup import prefix_containment_dedup
 
     rows = [
         (1, "web", "ab"),            # short doc, contained in 4 and 6
@@ -201,7 +202,7 @@ def test_prefix_containment_short_doc_bucket_fix(spark, tmp_path):
 
     got = {
         (r.doc_id, r.contained_in, r.len, r.container_len)
-        for r in q.prefix_containment_dedup(spark, str(tmp_path)).collect()
+        for r in prefix_containment_dedup(spark, str(tmp_path)).collect()
     }
     # doc 1 ("ab", id 1): candidates ordered by (t, id): ("ab",3) first
     assert (1, 3, 2, 2) in got
@@ -220,6 +221,6 @@ def test_prefix_containment_short_doc_bucket_fix(spark, tmp_path):
     )
     oracle = {tuple(r) for r in con.execute(
         "SELECT doc_id, contained_in, len, container_len FROM ("
-        + q.PREFIX_CONTAIN_SQL + ")"
+        + entry_mod.oracle_sql()["prefix_containment_dedup"] + ")"
     ).fetchall()}
     assert got == oracle

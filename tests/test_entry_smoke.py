@@ -66,3 +66,18 @@ def test_entry_runs(spark):
     df = entry_mod.entry(spark)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_query_rejects_a_duplicate_name():
+    """A second builder under a registered name fails loudly instead of
+    replacing the first, and leaves the registry as it was."""
+    from wp_motor_spark.queries import QUERIES, query
+
+    before = dict(QUERIES)
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+
+        @query(None, name="q1_pricing_summary")
+        def impostor(spark, sf_dir):
+            return None
+
+    assert QUERIES == before

@@ -172,12 +172,12 @@ def test_multimodal_real_decode_matches_pure_python(spark, sf001_dir):
     BMP per doc and runs the real decode path; the BMP round trip must be
     pixel-exact and width/height/f0 must equal a driver-side recompute
     from the same seeds, for every doc."""
-    from wp_motor_spark import queries as Q
     from wp_motor_spark.operators import imagecodec as ic
+    from wp_motor_spark.queries.corpus import multimodal_real_decode
 
     got = {
         r["doc_id"]: (r["width"], r["height"], r["f0"])
-        for r in Q.multimodal_real_decode(spark, sf001_dir).collect()
+        for r in multimodal_real_decode(spark, sf001_dir).collect()
     }
     assert got
     for did, (w, h, f0) in got.items():
@@ -197,7 +197,7 @@ def test_image_neardup_matches_exact_phash_hamming(spark, sf001_dir, docs):
     """image_neardup gate: recompute every image's pHash driver-side (same
     seeds as the query) and enumerate ALL pairs within hamming 7; the
     pigeonhole block join (n_blocks=8) must return exactly that set."""
-    from wp_motor_spark import queries as Q
+    from wp_motor_spark.queries.dedup import image_neardup
 
     phashes = {}
     for r in docs.where(F.col("doc_id") < 200).select("doc_id").collect():
@@ -215,7 +215,7 @@ def test_image_neardup_matches_exact_phash_hamming(spark, sf001_dir, docs):
         for b in ids[i + 1 :]
         if bin((phashes[a] ^ phashes[b]) & ((1 << 64) - 1)).count("1") <= 7
     }
-    got = {(r["id_a"], r["id_b"]) for r in Q.image_neardup(spark, sf001_dir).collect()}
+    got = {(r["id_a"], r["id_b"]) for r in image_neardup(spark, sf001_dir).collect()}
     assert want, "the fixture plants a near-dup every 10th doc"
     assert got == want
 
@@ -225,11 +225,11 @@ def test_compression_quality_matches_zlib_level6(spark, sf001_dir, docs):
     driver-side zlib.compress(level=6); empty text gives NULL."""
     import zlib
 
-    from wp_motor_spark import queries as Q
+    from wp_motor_spark.queries.corpus import compression_quality
 
     got = {
         r["doc_id"]: r["comp_ratio"]
-        for r in Q.compression_quality(spark, sf001_dir).collect()
+        for r in compression_quality(spark, sf001_dir).collect()
     }
     texts = {r["doc_id"]: r["text"] for r in docs.select("doc_id", "text").collect()}
     assert set(got) == set(texts)
@@ -338,7 +338,7 @@ def test_sketch_distinct_users_within_hll_error(spark, sf001_dir):
     """sketch_distinct_users gate: HLL++ (rsd=0.01) per-group estimate
     within 3·rsd of the exact distinct count computed independently in
     DuckDB."""
-    from wp_motor_spark.queries import sketch_distinct_users
+    from wp_motor_spark.queries.etl import sketch_distinct_users
 
     got = {
         r["event_type"]: r["approx_users"]
@@ -360,7 +360,7 @@ def test_sketch_value_quantiles_near_exact_twin(spark, sf001_dir):
     within the exact twin's value-neighborhood — with n << accuracy at
     this sf the rank error is < 1, so each approx quantile must equal one
     of the two order statistics bracketing the exact interpolated value."""
-    from wp_motor_spark.queries import events_quantiles, sketch_value_quantiles
+    from wp_motor_spark.queries.etl import events_quantiles, sketch_value_quantiles
 
     approx = {
         r["event_type"]: (r["ap50"], r["ap90"], r["ap99"])
@@ -451,7 +451,7 @@ def test_mrl_truncation_monotone_and_self_consistent(spark, sf001_dir):
     non-decreasing in dim — truncating away dimensions can only lose
     ranking signal. (Random synthetic embeddings spread variance evenly,
     so small-prefix recall is low — that's the worst case, not a bug.)"""
-    from wp_motor_spark.queries import mrl_truncation_eval
+    from wp_motor_spark.queries.retrieval import mrl_truncation_eval
 
     rows = (
         mrl_truncation_eval(spark, sf001_dir)
@@ -473,7 +473,7 @@ def test_countmin_never_underestimates(spark, sf001_dir):
     bucket sums that each include the token's own count, so est >= exact
     always (Cormode & Muthukrishnan 2005, Thm 1). Also record that the
     overestimate stays small at this vocab/width ratio."""
-    from wp_motor_spark.queries import countmin_heavy_hitters
+    from wp_motor_spark.queries.text import countmin_heavy_hitters
 
     r = (
         countmin_heavy_hitters(spark, sf001_dir)
@@ -492,7 +492,7 @@ def test_weighted_sample_biases_toward_heavy_docs(spark, sf001_dir):
     mean length must exceed the corpus mean — the defining property of
     probability-proportional-to-size sampling (deterministic here: the
     md5 draw is seeded)."""
-    from wp_motor_spark.queries import weighted_sample_aes
+    from wp_motor_spark.queries.corpus import weighted_sample_aes
 
     samp = (
         weighted_sample_aes(spark, sf001_dir).agg(F.avg("n_chars")).first()[0]
@@ -510,7 +510,7 @@ def test_stupid_backoff_separates_held_out_docs(spark, sf001_dir):
     held-out odd docs must score a higher mean perplexity than the train
     docs (measured ~39 vs ~11 at sf0.001) — the distribution-shift
     signal the operator exists to produce."""
-    from wp_motor_spark.queries import stupid_backoff_ppl
+    from wp_motor_spark.queries.text import stupid_backoff_ppl
 
     rows = (
         stupid_backoff_ppl(spark, sf001_dir)
@@ -527,7 +527,7 @@ def test_heaps_beta_bounded(spark, sf001_dir):
     law exponents above 1 would mean vocabulary growing faster than the
     corpus (impossible); the synthetic word-soup's tiny vocab saturates
     instantly, so betas near 0 are the expected value here."""
-    from wp_motor_spark.queries import heaps_law
+    from wp_motor_spark.queries.text import heaps_law
 
     rows = heaps_law(spark, sf001_dir).collect()
     assert rows, "no sources"
@@ -586,7 +586,7 @@ def test_cdc_chunking_edit_locality(spark, sf001_dir):
     every chunk lying entirely outside the window-reach of the insertion
     point keeps its hash, unlike fixed-size blocking where one insert
     shifts every later block."""
-    from wp_motor_spark.queries import cdc_chunking
+    from wp_motor_spark.queries.dedup import cdc_chunking
 
     base = spark.read.parquet(f"{sf001_dir}/documents.parquet").where(
         "doc_id < 20"
@@ -636,7 +636,7 @@ def test_stupid_backoff_scores_are_probability_like(spark, sf001_dir):
     """Every backoff level yields S in (0, 1] (c123 <= c12, 0.4*c23/c2
     <= 0.4, 0.16*c3/N <= 0.16), so sbo_ppl = exp(-mean ln S) >= 1 and
     finite for every document."""
-    from wp_motor_spark.queries import stupid_backoff_ppl
+    from wp_motor_spark.queries.text import stupid_backoff_ppl
 
     r = (
         stupid_backoff_ppl(spark, sf001_dir)
@@ -761,7 +761,8 @@ def test_cdc_chunking_short_docs_single_chunk(spark, tmp_path):
     and slice(a, 0, 5) threw at i=4)."""
     import duckdb
 
-    from wp_motor_spark.queries import CDC_CHUNKING_SQL, cdc_chunking
+    import __spark_entry__ as entry_mod
+    from wp_motor_spark.queries.dedup import cdc_chunking
 
     d = str(tmp_path)
     rows = [
@@ -782,7 +783,10 @@ def test_cdc_chunking_short_docs_single_chunk(spark, tmp_path):
         f"CREATE VIEW documents AS FROM "
         f"read_parquet('{d}/documents.parquet/*.parquet')"
     )
-    want = sorted(tuple(r) for r in con.sql(CDC_CHUNKING_SQL).fetchall())
+    want = sorted(
+        tuple(r)
+        for r in con.sql(entry_mod.oracle_sql()["cdc_chunking"]).fetchall()
+    )
     assert got == want
     assert all(idx == 1 for (doc, idx, n, h) in got if doc in (0, 1, 2))
 
@@ -793,7 +797,7 @@ def test_ewma_batch_exact_recurrence(spark, sf001_dir):
     applyInPandas linear fold must agree EXACTLY with a driver-side
     python recompute of the Hunter EWMA recurrence, the same discipline
     as the streaming gate."""
-    from wp_motor_spark.queries import ewma_anomaly_batch
+    from wp_motor_spark.queries.timeseries import ewma_anomaly_batch
 
     got = {
         (r.event_type, str(r.ts), r.value, r.ewma_mean, r.z)
@@ -970,7 +974,7 @@ def test_burst_detection_matches_exact_viterbi(spark, sf001_dir):
     fold + backtrack must reproduce the EXACT python two-state Kleinberg
     Viterbi over the same deterministically-compressed stream, and the
     bursts must land at the embedded day-10 block."""
-    from wp_motor_spark.queries import burst_detection
+    from wp_motor_spark.queries.timeseries import burst_detection
 
     got = [
         (r.event_type, str(r.burst_start), str(r.burst_end), r.n_events)
@@ -1028,7 +1032,7 @@ def test_bpe_train_merges_matches_python(spark, sf001_dir):
     """bpe_train_merges gate (rows-only — iterative): the distributed
     8-round merge learning must reproduce the EXACT python greedy BPE
     sequence (ranks, pairs, and weighted pair counts)."""
-    from wp_motor_spark.queries import bpe_train_merges
+    from wp_motor_spark.queries.corpus import bpe_train_merges
 
     got = [
         (r.merge_rank, r.left, r.right, r.pair_count)
@@ -1095,7 +1099,7 @@ def test_mmr_rerank_matches_python(spark, sf001_dir):
     """mmr_rerank gate (rows-only — iterative greedy): the distributed
     pick sequence (query, rank, vec_id) must equal the exact python
     MMR recompute over the same top-20 candidate sets."""
-    from wp_motor_spark.queries import mmr_rerank
+    from wp_motor_spark.queries.retrieval import mmr_rerank
 
     got = [
         (r.query_id, r.rank, r.vec_id)
@@ -1176,7 +1180,7 @@ def test_bradley_terry_matches_exact_mm(spark, sf001_dir):
     (bounded duel minting + driver-side MM over the |sources|^2 wins
     matrix) must reproduce the EXACT python recompute: same duels, same
     pseudo-count smoothing, same 100-round MM trajectory, same ranks."""
-    from wp_motor_spark.queries import bradley_terry
+    from wp_motor_spark.queries.stats import bradley_terry
 
     got = sorted(
         (r.source, r.bt_strength, r.wins, r.losses, r.rank)
@@ -1233,7 +1237,7 @@ def test_isotonic_calibration_matches_exact_pava(spark, sf001_dir):
     driver-side PAVA over the bounded bin table must reproduce the
     exact python recompute, and the fitted rates must be MONOTONE
     nondecreasing in the bin (the defining property)."""
-    from wp_motor_spark.queries import isotonic_calibration
+    from wp_motor_spark.queries.stats import isotonic_calibration
 
     got = sorted(
         (r.bin, r.n, r.raw_rate, r.isotonic_rate)

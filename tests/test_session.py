@@ -1,6 +1,9 @@
-"""Default driver heap: 25% of MemTotal, capped by the cgroup memory limit."""
+"""Session defaults: the driver heap (25% of MemTotal, capped by the cgroup
+memory limit) and the task slots of a local master."""
 
-from wp_motor_spark.session import _default_driver_mem
+import os
+
+from wp_motor_spark.session import _default_driver_mem, local_cores
 
 
 def _files(tmp_path, mem_total_kib: int, v2: str | None = None, v1: str | None = None):
@@ -36,3 +39,14 @@ def test_cgroup_v1_limit_and_its_no_limit_sentinel(tmp_path):
 def test_nothing_readable_keeps_the_bench_default(tmp_path):
     missing = str(tmp_path / "absent")
     assert _default_driver_mem(missing, (missing,)) == "24g"
+
+
+def test_local_cores_reads_spark_graft_cpus(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cores() == 3
+
+
+def test_local_cores_defaults_to_the_cpus_this_process_may_use(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert local_cores() == 3

@@ -27,9 +27,10 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from wp_motor_spark.queries import QUERIES
+    from wp_motor_spark.session import local_cores
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{local_cores()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .appName("catalog")
         .getOrCreate()

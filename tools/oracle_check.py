@@ -77,12 +77,14 @@ def main():
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
-    from wp_motor_spark.session import persist_scope
+    from wp_motor_spark.session import local_cores, persist_scope
 
     # a VANILLA session, like the round driver builds — queries must set
     # any runtime confs they need themselves (sources/tables.py)
     spark = (
-        SparkSession.builder.master("local[32]").appName("oracle_check").getOrCreate()
+        SparkSession.builder.master(f"local[{local_cores()}]")
+        .appName("oracle_check")
+        .getOrCreate()
     )
     con = duckdb.connect()
     for t in TABLES:

@@ -306,9 +306,10 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from wp_motor_spark.session import local_cores
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{local_cores()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .appName("plan_lint")
         .getOrCreate()

@@ -52,12 +52,19 @@ def _default_driver_mem(
     return f"{max(2, min(24, min(sizes) // (4 * 2**30)))}g"
 
 
+def local_cores() -> int:
+    """Task slots for a ``local[N]`` master: ``SPARK_GRAFT_CPUS`` when set,
+    else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "wp_motor_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("WP_SHUFFLE_PARTITIONS", str(max(cpus, 32)))

@@ -11,9 +11,9 @@ sustained-shift detector (Page 1954), a bounded-state Page-Hinkley
 mean-drift detector with restart (Gama et al. 2014), and a
 frozen-calibration EWMA control chart with time-varying limits
 (Roberts 1959; Lucas & Saccucci 1990). Batch twins live in
-queries.user_sessions / operators.dedup / queries.countmin_heavy_hitters
-/ queries.ewma_anomaly_batch / queries.cusum_changepoint /
-queries.page_hinkley.
+queries.etl.user_sessions / operators.dedup /
+queries.text.countmin_heavy_hitters / queries.timeseries.ewma_anomaly_batch
+/ queries.timeseries.cusum_changepoint / queries.timeseries.page_hinkley.
 """
 
 from wp_motor_spark.streaming.state import (

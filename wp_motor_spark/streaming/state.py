@@ -1,7 +1,7 @@
 """Custom stateful streaming operators.
 
 `sessionize_stream` mirrors the batch gap-sessionization query
-(queries.user_sessions: 30-min inactivity boundary) over an unbounded
+(queries.etl.user_sessions: 30-min inactivity boundary) over an unbounded
 stream: per-user open-session state, closed sessions emitted as soon as
 either (a) a later event proves the gap, or (b) the event-time watermark
 passes last_event + gap (EventTimeTimeout). State is three longs per
@@ -450,7 +450,7 @@ def cusum_stream(
     State is FIVE scalars per key (n, mean, m2-or-frozen-var, s_pos,
     s_neg) regardless of stream length — the same bounded-state
     property as the EWMA detector: |keys| x 40 bytes, no window
-    buffers. Batch twin (exact-oracle): queries.cusum_changepoint (the
+    buffers. Batch twin (exact-oracle): queries.timeseries.cusum_changepoint (the
     window-closed-form over daily rollups). The gate in
     tests/test_streaming_state.py recomputes this recurrence
     driver-side and requires exact agreement."""
@@ -567,8 +567,8 @@ def page_hinkley_stream(
     needed.
 
     State is FOUR scalars per key (n, sum, u, min_u) regardless of
-    stream length. Batch twin (exact-oracle): queries.page_hinkley
-    (window-closed-form over daily means, no restart). The gate in
+    stream length. Batch twin (exact-oracle):
+    queries.timeseries.page_hinkley (window-closed-form over daily means, no restart). The gate in
     tests/test_streaming_state.py recomputes this recurrence
     driver-side and requires exact agreement."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
